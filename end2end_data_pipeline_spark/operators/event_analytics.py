@@ -638,8 +638,8 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_dedup_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed dedup keep-first — the batch twin of the streaming
-    ``dropDuplicatesWithinWatermark`` path (streaming/pipeline.py):
+    """Windowed dedup keep-first — the batch form of a streaming
+    ``dropDuplicates`` (replayed by ``event_dedup_stream_replay``):
     within each (user, event_type, 10-minute bucket), only the first
     event survives; the output summarizes survivor ratios per type
     (the delivery-guarantee dashboard number).

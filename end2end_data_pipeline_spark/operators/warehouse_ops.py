@@ -418,10 +418,10 @@ def event_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The replay pins plain ``dropDuplicates`` (state never evicted →
     deterministic across any micro-batch split of the bounded
-    fixture); the unbounded-production form is
-    ``dropDuplicatesWithinWatermark`` with bounded state, golden-tested
-    in ``streaming/pipeline.py`` — eviction there is a liveness
-    tradeoff the bounded replay does not need."""
+    fixture); an unbounded stream would need
+    ``dropDuplicatesWithinWatermark`` to bound its state, and the
+    eviction that brings is a liveness tradeoff the bounded replay does
+    not need."""
     sf_abs = os.path.abspath(sf_dir)
     key = (spark.sparkContext.applicationId, sf_abs)
     table = _REPLAY.get((key[0], sf_abs + "#dedup"))

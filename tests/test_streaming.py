@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.plans.report import (
+    report_from_counts,
     status_pivot_report,
     with_derived_status,
 )
@@ -21,6 +22,7 @@ from end2end_data_pipeline_spark.sources.generator import generate_events, write
 from end2end_data_pipeline_spark.streaming.pipeline import (
     EVENT_SCHEMA,
     minutely_status_counts,
+    publish_minutely_reports,
     read_event_stream,
     start_minutely_aggregation,
 )
@@ -69,6 +71,33 @@ def test_report_no_data(spark, golden_events):
     empty = golden_events.limit(0)
     out = status_pivot_report(empty, "2024-01-01_12-31.json")
     assert out == {"report": "No data for 2024-01-01_12-31."}
+
+
+def test_report_from_counts_shapes():
+    """The one report builder: golden data shape with totals derived
+    from the per-type counts, and the no-data variant for no counts."""
+    by_type = {"ADD_TO_CART": {"SUCCESS": 4, "ERROR": 0}, "REFUND": {"SUCCESS": 0, "ERROR": 2}}
+    assert report_from_counts(by_type, "2024-01-01_12-30.json", 0.1234567) == {
+        "report": {
+            "total_events": 6,
+            "total_errors": 2,
+            "by_event_type": by_type,
+            "process_time": 0.12346,
+            "file_name": "2024-01-01_12-30.json",
+        }
+    }
+    assert report_from_counts({}, "2024-01-01_12-31.json", 0.5) == {
+        "report": "No data for 2024-01-01_12-31."
+    }
+
+
+def _assert_golden_shape(report: dict, golden_events) -> None:
+    """A streamed report has the batch report's keys, process_time
+    included (the reference's golden shape)."""
+    golden = status_pivot_report(golden_events, "2024-01-01_12-30.json")["report"]
+    assert report.keys() == golden.keys()
+    assert isinstance(report["process_time"], float)
+    assert report["process_time"] >= 0
 
 
 @pytest.fixture(scope="module")
@@ -190,11 +219,9 @@ def test_stream_rate_generator_shapes(spark):
             assert r.event_type in ("VIEW_PRODUCT", "ADD_TO_CART")
 
 
-def test_publish_minutely_reports(spark, tmp_path, events_with_tail):
+def test_publish_minutely_reports(spark, tmp_path, golden_events, events_with_tail):
     """foreachBatch publisher emits the reference report shape exactly
     once for the closed golden minute (S13 analog)."""
-    from end2end_data_pipeline_spark.streaming.pipeline import publish_minutely_reports
-
     src = str(tmp_path / "pub_src")
     ckpt = str(tmp_path / "pub_ckpt")
     events_with_tail.write.parquet(src)
@@ -209,6 +236,71 @@ def test_publish_minutely_reports(spark, tmp_path, events_with_tail):
     assert rep["total_events"] == 100
     assert rep["total_errors"] == 15
     assert rep["by_event_type"]["SEARCH"] == {"SUCCESS": 17, "ERROR": 3}
+    _assert_golden_shape(rep, golden_events)
+
+
+MULTI_MINUTES = [dt.datetime(2024, 1, 1, 12, 30 + m) for m in range(3)]
+
+
+@pytest.fixture(scope="module")
+def multi_window_run(spark, tmp_path_factory):
+    """Three consecutive minutes with different compositions (REFUND has
+    only ERROR rows) plus a tail 6 minutes on: the data batch reads them
+    all and the no-data batch that follows closes all three windows at
+    once. Returns (source path, published reports, micro-batches, Spark
+    job ids the query started)."""
+    rows = []
+    for m, minute in enumerate(MULTI_MINUTES):
+        counts = {"SEARCH": (m + 1, 2), "CHECKOUT": (0, m + 3), "REFUND": (m + 2, 0)}
+        for et, (n_err, n_ok) in counts.items():
+            for k in range(n_err + n_ok):
+                status = "ERROR" if k < n_err else "SUCCESS"
+                ts = minute + dt.timedelta(seconds=k)
+                rows.append((f"m{m}-{et}-{k}", "u0", "s0", et, ts, 50, status,
+                             500 if status == "ERROR" else None, None))
+    tail = MULTI_MINUTES[-1] + dt.timedelta(minutes=6)
+    rows.append(("tail", "u0", "s0", "SEARCH", tail, 50, "SUCCESS", None, None))
+    root = tmp_path_factory.mktemp("multi_window")
+    src = str(root / "src")
+    spark.createDataFrame(rows, EVENT_SCHEMA).write.parquet(src)
+
+    published: list[dict] = []
+    q = publish_minutely_reports(spark, src, str(root / "ckpt"), published.append)
+    q.awaitTermination(120)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    return src, published, len(q.recentProgress), jobs
+
+
+def test_publish_closes_several_windows_in_one_batch(spark, multi_window_run):
+    """One micro-batch closing several windows publishes each exactly
+    once, in minute order, each equal to the batch report of its minute
+    (zero-filled SUCCESS for the ERROR-only type) apart from process_time."""
+    src, published, n_batches, _ = multi_window_run
+    names = [p["report"]["file_name"] for p in published]
+    assert names == [m.strftime("%Y-%m-%d_%H-%M") + ".json" for m in MULTI_MINUTES]
+    assert n_batches < len(published)  # some batch closed several windows
+
+    events = spark.read.schema(EVENT_SCHEMA).parquet(src)
+    for minute, streamed in zip(MULTI_MINUTES, published):
+        batch = status_pivot_report(
+            events.where(F.date_trunc("minute", "event_timestamp") == minute),
+            minute.strftime("%Y-%m-%d_%H-%M") + ".json",
+        )
+        streamed, batch = streamed["report"], batch["report"]
+        assert streamed.pop("process_time") >= 0
+        batch.pop("process_time")
+        assert streamed == batch
+        assert list(streamed["by_event_type"]) == list(batch["by_event_type"])
+    assert published[0]["report"]["by_event_type"]["REFUND"] == {"SUCCESS": 0, "ERROR": 2}
+
+
+def test_publisher_runs_one_action_per_batch(multi_window_run):
+    """Every Spark action on a foreachBatch frame re-executes the
+    micro-batch, so the publisher must start exactly one job per
+    micro-batch (the stream runs its batches under the query's runId
+    job group)."""
+    _, _, n_batches, jobs = multi_window_run
+    assert len(jobs) == n_batches
 
 
 def test_sessionized_counts_stream(spark, tmp_path, events_with_tail):
@@ -410,7 +502,7 @@ def test_avro_stream_dead_letters_corrupt_frames(spark, tmp_path, golden_events)
     assert {r.corrupt_reason.split(":")[0] for r in bad.collect()} == {"ValueError"}
 
 
-def test_stream_to_dashboard_end_to_end(spark, tmp_path, events_with_tail):
+def test_stream_to_dashboard_end_to_end(spark, tmp_path, golden_events, events_with_tail):
     """The reference's whole report loop in one process (S13+S14):
     streaming minutely aggregation publishes through real HTTP into
     the latest-report store, and the consumer GET sees the exact
@@ -419,9 +511,6 @@ def test_stream_to_dashboard_end_to_end(spark, tmp_path, events_with_tail):
         ReportStoreServer,
         get_latest_report,
         make_report_publisher,
-    )
-    from end2end_data_pipeline_spark.streaming.pipeline import (
-        publish_minutely_reports,
     )
 
     src = str(tmp_path / "dash_src")
@@ -438,3 +527,4 @@ def test_stream_to_dashboard_end_to_end(spark, tmp_path, events_with_tail):
     assert rep["total_events"] == 100
     assert rep["total_errors"] == 15
     assert rep["by_event_type"]["SEARCH"] == {"SUCCESS": 17, "ERROR": 3}
+    _assert_golden_shape(rep, golden_events)

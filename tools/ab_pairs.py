@@ -1,0 +1,176 @@
+"""Interleaved parent/change A/B over the repository benchmark.
+
+Given two checkouts, a workload and a seed list, runs
+``python3 benchmark/run.py`` in each checkout once per seed, as pairs
+that alternate which side runs first (even pairs parent first, odd
+pairs change first), so drift in host load falls on both sides alike.
+For every metric it prints each side's median and quartiles and the
+fraction of pairs the change won (ties count for neither side). For
+the end-to-end metrics of the parent's ``BENCHMARK.json`` it also
+prints the verdict of ``verdict``:
+
+- ``gain``: the change wins at least 9/10 of the pairs, its median
+  beats the parent's by more than the parent's interquartile range,
+  and its runs failed no more operations in total than the parent's;
+- ``not worse``: every change run reads better than every parent run,
+  or both sides spread within the metric's bound and the change's
+  median is no worse than the parent's by more than that bound;
+- ``unresolved``: either side's IQR/median exceeds the bound;
+- ``worse``: otherwise.
+
+The bound is relative to the parent's median, as in ``BENCHMARK.json``.
+Every run takes ``benchmark/run.py``'s default run length, the
+benchmark's ``run_seconds``.
+
+    python3 tools/ab_pairs.py --parent ../parent --change . \\
+        --workload minute_reports --seeds 11-20 --trace 0 --out ab.json
+
+A run that prints no result line stops the A/B with its output; runs
+reporting ``correct: false`` and each side's total ``failed``
+operations are printed in the summary.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+WIN_SHARE = 0.9
+RUN_TIMEOUT_S = 900
+
+
+def quartiles(values: list[float]) -> tuple[float, float, float]:
+    """(q1, median, q3), inclusive method; a single value is all three."""
+    if len(values) < 2:
+        return values[0], values[0], values[0]
+    q1, q2, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def win_share(parent: list[float], change: list[float], better: str) -> float:
+    """Share of pairs (parent[i], change[i]) the change won; ties win
+    for neither side."""
+    sign = 1 if better == "lower" else -1
+    wins = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
+    return wins / len(parent)
+
+
+def verdict(
+    parent: list[float],
+    change: list[float],
+    better: str,
+    bound: float,
+    failed: tuple[int, int] = (0, 0),
+) -> str:
+    """Classify paired runs of one end-to-end metric (see module doc);
+    ``failed`` is the (parent, change) total of failed operations."""
+    if len(parent) != len(change) or not parent:
+        raise ValueError("verdict needs the same non-zero number of runs per side")
+    sign = 1 if better == "lower" else -1
+    p1, pm, p3 = quartiles(parent)
+    c1, cm, c3 = quartiles(change)
+    gap = sign * (pm - cm)  # > 0: the change's median is better
+    fails_more = failed[1] > failed[0]
+    if win_share(parent, change, better) >= WIN_SHARE and gap > p3 - p1 and not fails_more:
+        return "gain"
+    if all(sign * (p - c) > 0 for p in parent for c in change):
+        return "not worse"
+    if max((p3 - p1) / abs(pm or 1), (c3 - c1) / abs(cm or 1)) > bound:
+        return "unresolved"
+    return "not worse" if -gap <= bound * abs(pm) else "worse"
+
+
+def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict:
+    """One ``benchmark/run.py`` run; returns its result JSON with the
+    notes line under ``notes``."""
+    cmd = [
+        sys.executable, "benchmark/run.py", "--workload", workload,
+        "--seed", str(seed), "--trace", str(trace),
+    ]
+    proc = subprocess.run(
+        cmd, cwd=checkout, capture_output=True, text=True, timeout=RUN_TIMEOUT_S
+    )
+    lines = proc.stdout.strip().splitlines()
+    try:
+        result = json.loads(lines[-1])
+        result["notes"] = json.loads(lines[-2])
+    except (IndexError, json.JSONDecodeError):
+        raise RuntimeError(
+            f"{checkout} seed {seed}: no result line (exit {proc.returncode})\n"
+            f"{proc.stderr[-2000:]}"
+        ) from None
+    return result
+
+
+def parse_seeds(text: str) -> list[int]:
+    """``11-20`` or ``11,12,15`` (or a mix) to a list of seeds."""
+    seeds: list[int] = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def _fmt(values: list[float]) -> str:
+    return "/".join(f"{x:.4g}" for x in quartiles(values))
+
+
+def report(pairs: list[dict], spec: dict) -> list[str]:
+    """One line per metric found in the runs."""
+    failed = tuple(sum(r[side]["failed"] for r in pairs) for side in ("parent", "change"))
+    end_to_end = {m["name"]: m for m in spec["end_to_end"]}
+    better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+    lines = [f"{'metric':36} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  verdict"]
+    for name in pairs[0]["parent"]["metrics"]:
+        p = [r["parent"]["metrics"][name]["value"] for r in pairs]
+        c = [r["change"]["metrics"][name]["value"] for r in pairs]
+        m = end_to_end.get(name)
+        v = verdict(p, c, m["better"], m["bound"], failed) if m else "-"
+        wins = win_share(p, c, better.get(name, "lower"))
+        lines.append(f"{name:36} {_fmt(p):>26} {_fmt(c):>26} {wins:>6.2f}  {v}")
+    return lines
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="e.g. 11-20 or 11,12,15")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--out", help="write every run's result JSON here")
+    args = ap.parse_args()
+
+    with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
+    pairs: list[dict] = []
+    for i, seed in enumerate(parse_seeds(args.seeds)):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        pair = {"seed": seed, "first": order[0]}
+        for side in order:
+            pair[side] = run_once(sides[side], args.workload, seed, args.trace)
+            m = pair[side]["metrics"]
+            p50 = m.get("op_latency_p50_s", m.get("trace.op_latency_p50_s", {})).get("value")
+            r = pair[side]
+            print(f"seed {seed} {side:6} p50={p50} correct={r['correct']} failed={r['failed']}",
+                  flush=True)
+        pairs.append(pair)
+        if args.out:
+            with open(args.out, "w") as f:
+                json.dump(pairs, f, indent=1)
+    correct = {s: sum(p[s]["correct"] for p in pairs) for s in sides}
+    failed = {s: sum(p[s]["failed"] for p in pairs) for s in sides}
+    print(f"{args.workload}: {len(pairs)} pairs, --trace {args.trace}, "
+          f"correct runs parent {correct['parent']}/{len(pairs)}, change {correct['change']}/{len(pairs)}, "
+          f"failed ops parent {failed['parent']}, change {failed['change']}")
+    print("\n".join(report(pairs, spec)))
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())
