@@ -11,6 +11,18 @@ hand-wires s3a + executor sizing; here one factory owns all conf):
   converts to display timezones at the edge — SURVEY.md §2.6 F2).
 - Arrow enabled for the few pandas-interop paths (mapInPandas /
   applyInPandas in the multimodal and streaming-state operators).
+- Streaming checkpoints are written through Hadoop ``FileSystem``
+  (``FileSystemBasedCheckpointFileManager``) instead of the default
+  ``FileContext`` manager. pip PySpark ships no libhadoop, and without
+  it ``FileContext`` on ``file:`` starts a ``readlink`` process for
+  each path of every rename and a ``chmod`` process for every create,
+  i.e. for each offset, commit, source-log and state-store file. What
+  stays the same: every checkpoint file is written to a temp file and
+  renamed into place, with Hadoop ``.crc`` files and Spark's state
+  ``.delta.crc`` checksums. The rename is atomic on the local FS and
+  HDFS, and a no-overwrite rename onto an existing file fails, so a
+  second writer of a batch file still fails; no manager makes S3
+  renames atomic.
 """
 
 from __future__ import annotations
@@ -54,6 +66,14 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        # FileSystem, not FileContext, for every checkpoint write: the
+        # same temp-file + rename and checksums without starting a
+        # readlink/chmod process per file (module docstring)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # capacity, not semantics (the scale_gate/tiny_gate note): 12g
         # gives the unified storage pool headroom for the full-registry
         # session-cache working set plus the r13 materialized indexes

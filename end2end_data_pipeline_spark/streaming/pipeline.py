@@ -12,7 +12,12 @@ late-data hole). Here the same semantics are one always-on query:
 
 with late data handled by the watermark instead of a race, and
 exactly-once-per-sink guaranteed by checkpoint + idempotent sink (T7
-— the reference is only at-least-once into ClickHouse).
+— the reference is only at-least-once into ClickHouse). The checkpoint
+relies on an atomic temp-file rename: each offset, commit and
+state-store file is written to a temp file and renamed into place,
+and a no-overwrite rename onto an existing batch file fails, so one
+writer owns each batch (``session.get_spark`` picks the Hadoop
+``FileSystem`` checkpoint manager for this).
 
 ``trigger(availableNow=True)`` gives deterministic drain-the-source
 runs for tests and batch parity checks; a production deployment swaps

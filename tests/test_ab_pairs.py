@@ -8,7 +8,16 @@ from __future__ import annotations
 
 import pytest
 
-from tools.ab_pairs import parse_seeds, quartiles, verdict, win_share
+from tools.ab_pairs import (
+    drain_summary,
+    drained_early,
+    parse_seeds,
+    quartiles,
+    run_line,
+    steal_ticks,
+    verdict,
+    win_share,
+)
 
 PARENT = [1.80, 1.82, 1.85, 1.78, 1.90, 1.83, 1.79, 1.88, 1.81, 1.86]
 
@@ -65,3 +74,40 @@ def test_verdict_rejects_unpaired_runs():
 
 def test_parse_seeds():
     assert parse_seeds("11-14,20") == [11, 12, 13, 14, 20]
+
+
+PROC_STAT = """cpu  4538612 0 325396 5821657 4982 0 88808 418309 0 0
+cpu0 1134653 0 81349 1455414 1245 0 22202 104577 0 0
+intr 123456 0 0
+"""
+
+
+def _run(measured_s: float, ops: int, steal: int) -> dict:
+    return {
+        "correct": True,
+        "failed": 0,
+        "metrics": {"op_latency_p50_s": {"value": 0.8, "unit": "s"}},
+        "notes": {"ops": ops, "measured_s": measured_s},
+        "steal_ticks": steal,
+    }
+
+
+def test_steal_is_the_eighth_value_of_the_aggregate_cpu_line():
+    assert steal_ticks(PROC_STAT) == 418309
+    with pytest.raises(ValueError):
+        steal_ticks("cpu0 1 2 3 4 5 6 7 8 9 10\n")
+
+
+def test_runs_that_drain_their_input_early_are_flagged():
+    early, full = _run(17.2, 21, 40), _run(20.4, 19, 310)
+    assert drained_early(early, 20)
+    assert not drained_early(full, 20)
+    assert run_line(11, "change", early, 20) == (
+        "seed 11 change p50=0.8 correct=True failed=0 ops=21 measured_s=17.2 steal=40 early"
+    )
+    assert run_line(11, "parent", full, 20).endswith("measured_s=20.4 steal=310")
+    pairs = [{"parent": full, "change": early}, {"parent": full, "change": _run(15.9, 21, 12)}]
+    parent_line, change_line = drain_summary(pairs, 20)
+    assert parent_line.startswith("parent: 0/2 runs drained early (measured_s < 20)")
+    assert change_line.startswith("change: 2/2 runs drained early (measured_s < 20)")
+    assert "ops 21/21/21" in change_line

@@ -8,6 +8,7 @@ golden, plus the empty-input edge case."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -156,6 +157,86 @@ def test_stream_resumes_from_checkpoint(spark, tmp_path, events_with_tail):
     start_minutely_aggregation(spark, src, sink, ckpt).awaitTermination(120)
     n2 = spark.read.parquet(sink).count()
     assert n1 == n2 == 10
+
+
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def test_checkpoint_writes_go_through_hadoop_filesystem(spark, tmp_path):
+    """The session writes checkpoints through Hadoop FileSystem (no
+    readlink/chmod process per file without libhadoop), and keeps the
+    metadata log's one-writer-per-batch guard: a second no-overwrite
+    write of a batch file fails and leaves the first writer's bytes."""
+    jvm = spark._jvm
+    ckpt = str(tmp_path / "ckpt_mgr")
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
+    manager = getattr(jvm, CHECKPOINTING + "CheckpointFileManager").create(
+        hadoop_path(ckpt), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert manager.getClass().getName() == CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+
+    batch_file = hadoop_path(ckpt + "/offsets/0")
+    first = manager.createAtomic(batch_file, False)
+    first.write(bytearray(b"v1\nfirst writer"))
+    first.close()
+    second = manager.createAtomic(batch_file, False)
+    second.write(bytearray(b"v1\nsecond writer"))
+    with pytest.raises(Exception, match="already exists"):
+        second.close()
+    with open(os.path.join(ckpt, "offsets", "0"), "rb") as f:
+        assert f.read() == b"v1\nfirst writer"
+
+
+def test_stream_resumes_checkpoint_written_through_filecontext(spark, tmp_path, events_with_tail):
+    """A checkpoint written under Spark's default FileContext manager
+    (the engine's manager before it switched to FileSystem) resumes
+    under the engine default: offsets, the file-source log and the
+    open window's state carry over, and the sink equals the batch
+    answer over both files. The checkpoint keeps Hadoop's .crc files
+    and Spark's state .delta.crc checksums."""
+    src = str(tmp_path / "events_src3")
+    sink = str(tmp_path / "agg_sink3")
+    ckpt = str(tmp_path / "ckpt3")
+    # file A: the golden 12:30 minute plus 5 SEARCH events at 12:35,
+    # whose window stays open in the state store after phase 1
+    events_with_tail.write.parquet(src)
+    engine_manager = spark.conf.get(MANAGER_CONF)
+    spark.conf.set(MANAGER_CONF, CHECKPOINTING + "FileContextBasedCheckpointFileManager")
+    try:
+        start_minutely_aggregation(spark, src, sink, ckpt).awaitTermination(120)
+    finally:  # restore get_spark's value; an unset would drop it
+        spark.conf.set(MANAGER_CONF, engine_manager)
+    assert spark.read.parquet(sink).count() == 10  # 12:30 closed, 12:35 in state
+
+    # file B: more of the open 12:35 window, a 12:36 minute, and a tail
+    # that closes both
+    later = [(dt.datetime(2024, 1, 1, 12, 35, 30), "SEARCH", "ERROR"),
+             (dt.datetime(2024, 1, 1, 12, 35, 40), "CHECKOUT", "SUCCESS"),
+             (dt.datetime(2024, 1, 1, 12, 36, 10), "SEARCH", "SUCCESS"),
+             (dt.datetime(2024, 1, 1, 12, 40, 0), "SEARCH", "SUCCESS")]
+    spark.createDataFrame(
+        [(f"b{i}", "u1", "s1", et, ts, 50, st, 500 if st == "ERROR" else None, None)
+         for i, (ts, et, st) in enumerate(later)],
+        EVENT_SCHEMA,
+    ).write.mode("append").parquet(src)
+    start_minutely_aggregation(spark, src, sink, ckpt).awaitTermination(120)
+
+    batch = minutely_status_counts(spark.read.schema(EVENT_SCHEMA).parquet(src)).where(
+        F.col("event_minute") < dt.datetime(2024, 1, 1, 12, 40)
+    )
+    streamed = sorted(map(tuple, spark.read.parquet(sink).collect()))
+    assert streamed == sorted(map(tuple, batch.collect()))
+    assert (dt.datetime(2024, 1, 1, 12, 35), "SEARCH", "SUCCESS", 5) in streamed
+
+    files = [os.path.join(d, f) for d, _, fs in os.walk(ckpt) for f in fs]
+    for log in ("offsets", "commits", "sources"):
+        assert any(f.endswith(".crc") and f"{os.sep}{log}{os.sep}" in f for f in files), log
+    state = [os.path.basename(f) for f in files if f"{os.sep}state{os.sep}" in f]
+    assert any(f.endswith(".delta") for f in state)
+    # Hadoop's checksum of 1.delta is .1.delta.crc; Spark's is 1.delta.crc
+    assert any(f.startswith(".") and f.endswith(".delta.crc") for f in state)
+    assert any(not f.startswith(".") and f.endswith(".delta.crc") for f in state)
 
 
 def test_generator_warehouse_roundtrip(spark, tmp_path):

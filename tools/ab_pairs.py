@@ -28,6 +28,13 @@ benchmark's ``run_seconds``.
 A run that prints no result line stops the A/B with its output; runs
 reporting ``correct: false`` and each side's total ``failed``
 operations are printed in the summary.
+
+Each run's line also shows the notes line's ``ops`` and ``measured_s``
+and the host's CPU steal ticks during the run (the ``steal`` column of
+the ``cpu`` line of ``/proc/stat``, read before and after), so runs can
+be sorted by contention. A run whose ``measured_s`` is below the
+benchmark's ``run_seconds`` drained its input before the time was up;
+it is flagged ``early``, and the summary counts such runs per side.
 """
 
 from __future__ import annotations
@@ -84,16 +91,52 @@ def verdict(
     return "not worse" if -gap <= bound * abs(pm) else "worse"
 
 
+def steal_ticks(stat_text: str) -> int:
+    """The ``steal`` column (the 8th value) of the aggregate ``cpu``
+    line of a ``/proc/stat`` text."""
+    for line in stat_text.splitlines():
+        fields = line.split()
+        if fields and fields[0] == "cpu":
+            return int(fields[8])
+    raise ValueError("no aggregate cpu line")
+
+
+def read_steal() -> int:
+    with open("/proc/stat") as f:
+        return steal_ticks(f.read())
+
+
+def drained_early(result: dict, run_seconds: float) -> bool:
+    """The run ran out of input before ``run_seconds`` had passed."""
+    return result["notes"]["measured_s"] < run_seconds
+
+
+def run_line(seed: int, side: str, result: dict, run_seconds: float) -> str:
+    """The progress line printed after each run."""
+    m = result["metrics"]
+    p50 = m.get("op_latency_p50_s", m.get("trace.op_latency_p50_s", {})).get("value")
+    notes = result["notes"]
+    return (
+        f"seed {seed} {side:6} p50={p50} correct={result['correct']} "
+        f"failed={result['failed']} ops={notes['ops']} measured_s={notes['measured_s']} "
+        f"steal={result['steal_ticks']}"
+        + (" early" if drained_early(result, run_seconds) else "")
+    )
+
+
 def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict:
     """One ``benchmark/run.py`` run; returns its result JSON with the
-    notes line under ``notes``."""
+    notes line under ``notes`` and the host's steal ticks during the
+    run under ``steal_ticks``."""
     cmd = [
         sys.executable, "benchmark/run.py", "--workload", workload,
         "--seed", str(seed), "--trace", str(trace),
     ]
+    steal0 = read_steal()
     proc = subprocess.run(
         cmd, cwd=checkout, capture_output=True, text=True, timeout=RUN_TIMEOUT_S
     )
+    steal = read_steal() - steal0
     lines = proc.stdout.strip().splitlines()
     try:
         result = json.loads(lines[-1])
@@ -103,6 +146,7 @@ def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict:
             f"{checkout} seed {seed}: no result line (exit {proc.returncode})\n"
             f"{proc.stderr[-2000:]}"
         ) from None
+    result["steal_ticks"] = steal
     return result
 
 
@@ -117,6 +161,23 @@ def parse_seeds(text: str) -> list[int]:
 
 def _fmt(values: list[float]) -> str:
     return "/".join(f"{x:.4g}" for x in quartiles(values))
+
+
+def drain_summary(pairs: list[dict], run_seconds: float) -> list[str]:
+    """Per side: how many runs drained early, and the spread of the
+    runs' ``measured_s``, ``ops`` and steal ticks."""
+    lines = []
+    for side in ("parent", "change"):
+        runs = [p[side] for p in pairs]
+        early = sum(drained_early(r, run_seconds) for r in runs)
+        measured = [r["notes"]["measured_s"] for r in runs]
+        ops = [r["notes"]["ops"] for r in runs]
+        steal = [r["steal_ticks"] for r in runs]
+        lines.append(
+            f"{side}: {early}/{len(runs)} runs drained early (measured_s < {run_seconds:g}); "
+            f"measured_s {_fmt(measured)}, ops {_fmt(ops)}, steal ticks {_fmt(steal)}"
+        )
+    return lines
 
 
 def report(pairs: list[dict], spec: dict) -> list[str]:
@@ -154,11 +215,7 @@ def main() -> int:
         pair = {"seed": seed, "first": order[0]}
         for side in order:
             pair[side] = run_once(sides[side], args.workload, seed, args.trace)
-            m = pair[side]["metrics"]
-            p50 = m.get("op_latency_p50_s", m.get("trace.op_latency_p50_s", {})).get("value")
-            r = pair[side]
-            print(f"seed {seed} {side:6} p50={p50} correct={r['correct']} failed={r['failed']}",
-                  flush=True)
+            print(run_line(seed, side, pair[side], spec["run_seconds"]), flush=True)
         pairs.append(pair)
         if args.out:
             with open(args.out, "w") as f:
@@ -168,6 +225,7 @@ def main() -> int:
     print(f"{args.workload}: {len(pairs)} pairs, --trace {args.trace}, "
           f"correct runs parent {correct['parent']}/{len(pairs)}, change {correct['change']}/{len(pairs)}, "
           f"failed ops parent {failed['parent']}, change {failed['change']}")
+    print("\n".join(drain_summary(pairs, spec["run_seconds"])))
     print("\n".join(report(pairs, spec)))
     return 0
 
