@@ -31,7 +31,6 @@ from end2end_data_pipeline_spark.sources.tables import (
     load_table,
     session_cached,
     session_checkpointed,
-    sf_tag,
 )
 
 PATH_LEN = 3
@@ -189,7 +188,7 @@ def _copurchase_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "copurchase_op"),
-        load_table(spark, sf_dir, "lineitem")
+        lambda: load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct(),
     )
@@ -228,7 +227,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_checkpointed(
         spark,
         frame_memo_tag(sf_dir, "copurchase_pairs"),
-        a.join(
+        lambda: a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
@@ -493,8 +492,6 @@ def sessions_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin of two O(types) distinct lists (broadcast, waived in
     ``tools/plan_audit.py``) left-joined to the counts — matrix size
     is independent of corpus size."""
-    import os
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
@@ -522,8 +519,8 @@ def sessions_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes as 200 near-empty tasks.
     types = session_cached(
         spark,
-        f"markov_types_{sf_tag(os.path.abspath(sf_dir))}",
-        ev.select(F.col("event_type").alias("t")).distinct().coalesce(1),
+        frame_memo_tag(sf_dir, "markov_types"),
+        lambda: ev.select(F.col("event_type").alias("t")).distinct().coalesce(1),
     )
     v = types.agg(F.count("*").cast("bigint").alias("v"))
     grid = (
@@ -625,7 +622,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = session_cached(
         spark,
         frame_memo_tag(sf_dir, "copurchase_dir_edges"),
-        _copurchase_pairs(spark, sf_dir).select(
+        lambda: _copurchase_pairs(spark, sf_dir).select(
             F.col("part_a").alias("pa"), F.col("part_b").alias("pb")
         ),
     )
@@ -748,8 +745,6 @@ def part_itemitem_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-min(deg,cap)^2 — linear in customers, never |parts|^2. The
     self-join shuffles the capped incidence once on the customer key;
     degree counts join AFTER the support filter prunes the pair table."""
-    import os
-
     # session_cached: the capped incidence feeds the self-join and both
     # degree branches (12 FileScans without it), and repeated
     # invocations (bench repeat=N, sweeps) must reuse ONE
@@ -766,8 +761,8 @@ def part_itemitem_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcap = Window.partitionBy("c").orderBy(F.col("n_buy").desc(), "p")
     capped = session_cached(
         spark,
-        f"cf_capped_{sf_tag(os.path.abspath(sf_dir))}",
-        buys.withColumn("rnk", F.row_number().over(wcap))
+        frame_memo_tag(sf_dir, "cf_capped"),
+        lambda: buys.withColumn("rnk", F.row_number().over(wcap))
         .where(F.col("rnk") <= CF_DEGREE_CAP)
         .select("c", "p")
         .coalesce(8),
@@ -890,15 +885,13 @@ def copurchase_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan — 4 lineitem scans; the triangles operator hit the same
     trap), coalesced before the shared session cache (AQE doesn't
     size cached builds)."""
-    import os
-
     p0 = _copurchase_pairs(spark, sf_dir).select(
         F.col("part_a").alias("u"), F.col("part_b").alias("v")
     )
     return session_cached(
         spark,
-        f"copurchase_edges_{sf_tag(os.path.abspath(sf_dir))}",
-        p0.select(
+        frame_memo_tag(sf_dir, "copurchase_edges"),
+        lambda: p0.select(
             F.explode(
                 F.array(
                     F.struct(F.col("u"), F.col("v")),
@@ -937,8 +930,6 @@ def part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level aggregate — the classic synchronous Pregel step
     expressed as join+groupBy, {LPA_ITERS} bounded rounds, no
     driver-side graph state."""
-    import os
-
     edges = copurchase_sym_edges(spark, sf_dir)
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -952,8 +943,8 @@ def part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round O(|parts|) rows and the plan O(1) per round.
         labels = session_checkpointed(
             spark,
-            f"lpa_l{k + 1}_{sf_tag(os.path.abspath(sf_dir))}",
-            edges.join(labels, edges["v"] == labels["node"])
+            frame_memo_tag(sf_dir, f"lpa_l{k + 1}"),
+            lambda: edges.join(labels, edges["v"] == labels["node"])
             .groupBy(F.col("u").alias("nd"), "label")
             .agg(F.count("*").alias("cnt"))
             .select(F.col("nd").alias("node"), "label", "cnt")

@@ -15,9 +15,9 @@ three ways:
 - lifecycle: the bucketed tables are materialized here, through the
   same write path a production job would run.
 
-The bucketed copy is materialized once per (SparkSession, sf_dir)
-into the system temp dir and cached in the session catalog; repeat
-calls reuse it. At 100 TB this one-time write is the amortized
+The bucketed copy is materialized once per (Spark application,
+sf_dir) into the application's scratch dir and registered in the
+session catalog; repeat calls reuse it. At 100 TB this one-time write is the amortized
 investment that removes BOTH shuffle sides from every subsequent
 equi-join on the order key (the orders⋈lineitem family here runs in
 several registered queries) — the bucket count would be sized at
@@ -27,7 +27,6 @@ several registered queries) — the bucket count would be sized at
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,13 +37,13 @@ from end2end_data_pipeline_spark.sources.bucketing import (
     cobucket_orders_lineitem,
 )
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     session_cached,
+    session_memo,
+    session_scratch,
     sf_tag,
 )
-
-# (applicationId, abs sf_dir) -> (orders_table, lineitem_table)
-_BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def bucketed_orders_lineitem(
@@ -52,21 +51,18 @@ def bucketed_orders_lineitem(
 ) -> tuple[str, str]:
     """Catalog names of the co-bucketed orders/lineitem copies for
     ``sf_dir``, materializing them on first use in this session."""
-    sf_abs = os.path.abspath(sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_abs)
-    cached = _BUCKETED.get(key)
-    if cached and all(spark.catalog.tableExists(t) for t in cached):
-        return cached
-    tag = sf_tag(sf_abs)
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_bucketed", app_id, tag
+
+    def build() -> tuple[str, str]:
+        prefix = f"bkt_{sf_tag(os.path.abspath(sf_dir))}"
+        out = session_scratch(spark, prefix)
+        return cobucket_orders_lineitem(spark, sf_dir, out, prefix=prefix)
+
+    return session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "bucketed_orders_lineitem"),
+        build,
+        valid=lambda names: all(spark.catalog.tableExists(t) for t in names),
     )
-    names = cobucket_orders_lineitem(
-        spark, sf_dir, out, prefix=f"bkt_{tag}"
-    )
-    _BUCKETED[key] = names
-    return names
 
 
 @query(
@@ -223,10 +219,6 @@ def q18_large_orders_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, abs sf_dir) -> suppkey-bucketed lineitem table name
-_BUCKETED_SUPP: dict[tuple[str, str], str] = {}
-
-
 def bucketed_lineitem_by_suppkey(spark: SparkSession, sf_dir: str) -> str:
     """Catalog name of a lineitem copy bucketed on ``l_suppkey`` —
     the OTHER high-traffic lineitem key: revenue-per-supplier shapes
@@ -234,28 +226,25 @@ def bucketed_lineitem_by_suppkey(spark: SparkSession, sf_dir: str) -> str:
     key makes those rollups exchange-free the same way the orderkey
     family de-shuffles its joins. One more one-time write, amortized
     across every suppkey-keyed consumer in the session."""
-    sf_abs = os.path.abspath(sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_abs)
-    cached = _BUCKETED_SUPP.get(key)
-    if cached and spark.catalog.tableExists(cached):
-        return cached
-    tag = sf_tag(sf_abs)
-    name = f"bkt_{tag}_lineitem_supp"
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_bucketed", app_id, tag, name
-    )
     from end2end_data_pipeline_spark.sources.bucketing import write_bucketed
 
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"),
-        name,
-        "l_suppkey",
-        sort_col="l_suppkey",
-        path=out,
+    def build() -> str:
+        name = f"bkt_{sf_tag(os.path.abspath(sf_dir))}_lineitem_supp"
+        write_bucketed(
+            load_table(spark, sf_dir, "lineitem"),
+            name,
+            "l_suppkey",
+            sort_col="l_suppkey",
+            path=session_scratch(spark, name),
+        )
+        return name
+
+    return session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "bucketed_lineitem_by_suppkey"),
+        build,
+        valid=spark.catalog.tableExists,
     )
-    _BUCKETED_SUPP[key] = name
-    return name
 
 
 @query(
@@ -349,8 +338,8 @@ def q15_top_supplier_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # InMemoryRelation per (app, sf_dir) (ADVICE r8).
     revenue = session_cached(
         spark,
-        f"q15_rollup_{sf_tag(os.path.abspath(sf_dir))}",
-        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
+        frame_memo_tag(sf_dir, "q15_rollup"),
+        lambda: li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(cents).alias("total_revenue_cents"))
         .coalesce(1),
     )

@@ -15,19 +15,21 @@ value-exact.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
+    drain_to_memory,
     fan_out,
     frame_memo_tag,
     input_scaled_partitions,
     load_table,
+    model_memo_key,
     session_cached,
+    session_memo,
+    session_scratch,
     sf_tag,
 )
 
@@ -146,7 +148,7 @@ def _all_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "corpus_shingles"),
-        docs.where(F.expr(f"size({toks}) >= {CONTAM_N}"))
+        lambda: docs.where(F.expr(f"size({toks}) >= {CONTAM_N}"))
         .select(
             "doc_id", F.expr(th.reduced_token_hashes(toks, th.SPARK)).alias("th_arr")
         )
@@ -224,7 +226,7 @@ def _contam_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "contam_perdoc"),
-        train.join(hits, "doc_id", "left")
+        lambda: train.join(hits, "doc_id", "left")
         .select(
             "doc_id",
             F.size("shh").cast("bigint").alias("n_shingles"),
@@ -536,14 +538,12 @@ def docs_quantile_norm_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "lang", F.col("n_chars").alias("v")
     )
-    import os
-
     # session_cached: both CDFs fold out of this one histogram (a
     # second reference would re-scan the corpus); O(langs x values)
     hl = session_cached(
         spark,
-        f"qnorm_hl_{sf_tag(os.path.abspath(sf_dir))}",
-        docs.groupBy("lang", "v")
+        frame_memo_tag(sf_dir, "qnorm_hl"),
+        lambda: docs.groupBy("lang", "v")
         .agg(F.count("*").cast("bigint").alias("n"))
         .coalesce(1),
     )
@@ -696,7 +696,7 @@ def _dsir_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = session_cached(
         spark,
         frame_memo_tag(sf_dir, "dsir_base"),
-        docs.select(
+        lambda: docs.select(
             "doc_id",
             "lang",
             F.expr(th.reduced_token_hashes(toks, th.SPARK)).alias("th_arr"),
@@ -748,7 +748,7 @@ def _dsir_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "dsir_perdoc"),
-        base.join(perdoc, "doc_id", "left")
+        lambda: base.join(perdoc, "doc_id", "left")
         .crossJoin(F.broadcast(totals))
         .select(
             "doc_id",
@@ -796,7 +796,7 @@ def _curation_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "curation_scored"),
-        docs.select(
+        lambda: docs.select(
             "doc_id",
             "source",
             "lang",
@@ -1129,16 +1129,6 @@ def source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming curation replay --------------------------------------
 
-_CURATION_REPLAY: dict[tuple, str] = {}
-_CURATION_REPLAY_IDS = itertools.count()
-
-
-def _curation_scratch_dir() -> str:
-    from end2end_data_pipeline_spark.sources.tables import run_scratch_dir
-
-    return run_scratch_dir("spark_graft_curation_")
-
-
 @query("curation_stream_replay", oracle=ORACLE["corpus_curation_funnel"])
 def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation funnel ON THE STREAMING ENGINE: documents arrive
@@ -1166,20 +1156,9 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _quality_exprs,
     )
 
-    from end2end_data_pipeline_spark.sources.tables import model_memo_key
-
-    # (applicationId, abspath, mtime, size) via the shared builder so
-    # regenerating documents.parquet at the same path within one
-    # application can never serve a stale drained table (r10 advice;
-    # r12 review: this was the fourth inline copy of the key pattern
-    # model_memo_key unified)
     docs_path = _os.path.join(sf_dir, "documents.parquet")
-    key = model_memo_key(spark, sf_dir, "documents")
-    table = _CURATION_REPLAY.get(key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"curation_stream_replay_{next(_CURATION_REPLAY_IDS)}"
-        scratch = _curation_scratch_dir()
-        ckpt = _os.path.join(scratch, "ckpt")
+
+    def build() -> str:
         # corpus index frames — the STATIC side of the stream-static
         # joins (deterministic batch frames; session-cached builders).
         # Survivorship among QUALITY SURVIVORS, same convention as the
@@ -1202,12 +1181,12 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         if _os.path.isdir(docs_path):
             stream_dir = docs_path
         else:
-            stream_dir = _os.path.join(scratch, "src")
+            sf_abs = _os.path.abspath(sf_dir)
+            stream_dir = session_scratch(spark, f"curation_src_{sf_tag(sf_abs)}")
+            link = _os.path.join(stream_dir, "documents.parquet")
             _os.makedirs(stream_dir, exist_ok=True)
-            _os.symlink(
-                _os.path.abspath(docs_path),
-                _os.path.join(stream_dir, "documents.parquet"),
-            )
+            if not _os.path.lexists(link):
+                _os.symlink(_os.path.abspath(docs_path), link)
         schema = spark.read.parquet(docs_path).schema
         flagged_stream = (
             spark.readStream.schema(schema)
@@ -1241,16 +1220,19 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sel"),
             )
         )
-        q = (
-            flagged_stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        return drain_to_memory(
+            spark, "curation_stream_replay", flagged_stream, "append"
         )
-        q.awaitTermination()
-        _CURATION_REPLAY[key] = table
+
+    # keyed on (abspath, mtime, size) via the shared builder so
+    # regenerating documents.parquet at the same path within one
+    # application can never serve a stale drained table (r10 advice)
+    table = session_memo(
+        spark,
+        ("curation_stream_replay", *model_memo_key(sf_dir, "documents")),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return _funnel_rollup(spark.table(table))
 
 
@@ -1333,7 +1315,7 @@ def source_ablation_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     sl = session_cached(
         spark,
         frame_memo_tag(sf_dir, "ablation_sl"),
-        docs.groupBy("source", "lang").agg(
+        lambda: docs.groupBy("source", "lang").agg(
             F.count("*").alias("n_docs"),
             F.sum(F.expr(f"size({toks})")).cast("bigint").alias("n_tokens"),
         ),

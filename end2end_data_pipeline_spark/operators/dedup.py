@@ -38,7 +38,9 @@ from end2end_data_pipeline_spark.sources.tables import (
     model_memo_key,
     session_cached,
     session_checkpointed,
-    session_memoized,
+    session_memo,
+    session_scratch,
+    sf_tag,
 )
 
 SHINGLE_N = 3
@@ -216,7 +218,9 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the pair queries cached the identical frame; the cache is
     columnar, so selecting the mh columns never deserializes shh)."""
     sigs = session_cached(
-        spark, frame_memo_tag(sf_dir, "minhash_sigs"), _signatures(spark, sf_dir)
+        spark,
+        frame_memo_tag(sf_dir, "minhash_sigs"),
+        lambda: _signatures(spark, sf_dir),
     )
     return sigs.select("doc_id", *[f"mh{j}" for j in range(N_MINHASH)]).orderBy(
         "doc_id"
@@ -296,7 +300,9 @@ def dedup_minhash_pairs(
     hot-bucket guard; the oversize-bucket list is tiny so the filter
     is a broadcast anti-join)."""
     sigs = session_cached(
-        spark, frame_memo_tag(sf_dir, "minhash_sigs"), _signatures(spark, sf_dir)
+        spark,
+        frame_memo_tag(sf_dir, "minhash_sigs"),
+        lambda: _signatures(spark, sf_dir),
     )
     bands = bands_for(sigs)
     oversize = (
@@ -405,7 +411,7 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "simhash_sigs"),
-        _simhash_signatures(spark, sf_dir),
+        lambda: _simhash_signatures(spark, sf_dir),
     ).orderBy("doc_id")
 
 
@@ -435,7 +441,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     then exact hamming filter. 16-bit chunks: hamming <= 3 over 64
     bits guarantees one equal chunk."""
     sigs = session_cached(
-        spark, frame_memo_tag(sf_dir, "simhash_sigs"), _simhash_signatures(spark, sf_dir)
+        spark,
+        frame_memo_tag(sf_dir, "simhash_sigs"),
+        lambda: _simhash_signatures(spark, sf_dir),
     )
     chunks = sigs.select(
         "doc_id",
@@ -529,7 +537,7 @@ def dedup_ngram_jaccard_pairs(
     sh = session_cached(
         spark,
         frame_memo_tag(sf_dir, "shingle_sets"),
-        docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
+        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
     )
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     hot = (
@@ -568,7 +576,9 @@ def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_pairs candidate+verify pipeline, minus output
     shaping)."""
     sigs = session_cached(
-        spark, frame_memo_tag(sf_dir, "minhash_sigs"), _signatures(spark, sf_dir)
+        spark,
+        frame_memo_tag(sf_dir, "minhash_sigs"),
+        lambda: _signatures(spark, sf_dir),
     )
     bands = sigs.select(
         "doc_id",
@@ -658,14 +668,13 @@ CC_PARTITIONS = 8
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the verified near-dup pair graph via
     iterative min-label propagation (see ``dedup_clusters``) —
-    memoized per (session, sf_dir): the loop runs eager per-round
+    memoized per (application, sf_dir): the loop runs eager per-round
     checkpoints and driver-side convergence counts, and its two
     consumers (clusters, cluster-size profile) plus bench repeats
     otherwise re-run every round; the final labels are already a
-    materialized LogicalRDD, so later callers just read it (and the
-    loop's own `finally: bidir.unpersist()` makes re-entry doubly
-    expensive — the edge cache is gone by then)."""
-    return session_memoized(
+    materialized LogicalRDD, so later callers just read it. A loop
+    that raises stores nothing, so the next call runs it again."""
+    return session_memo(
         spark,
         frame_memo_tag(sf_dir, "cc_labels"),
         lambda: _cluster_labels_build(spark, sf_dir),
@@ -676,10 +685,10 @@ def _cluster_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _lsh_edges(spark, sf_dir)
     # symmetrize by exploding a 2-array of structs — a self-union
     # would run the whole LSH candidate+verify pipeline once per
-    # branch during the cache build (guide §2.4; the itemitem lesson)
-    bidir = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "cc_bidir_edges"),
+    # branch during the cache build (guide §2.4; the itemitem lesson).
+    # A plain cache, not a session entry: the loop is its only reader
+    # and unpersists it on the way out, success or not.
+    bidir = (
         edges.select(
             F.explode(
                 F.array(
@@ -693,7 +702,8 @@ def _cluster_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .repartition(CC_PARTITIONS, "src"),
+        .repartition(CC_PARTITIONS, "src")
+        .cache()
     )
     labels = disk_checkpoint(
         bidir.select(F.col("src").alias("node")).distinct()
@@ -849,7 +859,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = session_cached(
         spark,
         frame_memo_tag(sf_dir, "shingle_sets"),
-        docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
+        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
     )
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     hot = (
@@ -938,7 +948,9 @@ def dedup_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared ``minhash_sigs`` session cache (see
     dedup_minhash_signatures)."""
     sigs = session_cached(
-        spark, frame_memo_tag(sf_dir, "minhash_sigs"), _signatures(spark, sf_dir)
+        spark,
+        frame_memo_tag(sf_dir, "minhash_sigs"),
+        lambda: _signatures(spark, sf_dir),
     )
     bands = sigs.select(
         "doc_id",
@@ -1039,7 +1051,7 @@ def dedup_prefixfilter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = session_cached(
         spark,
         frame_memo_tag(sf_dir, "shingle_sets"),
-        docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
+        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
     )
     inv = sh.select(
         "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("shingle")
@@ -1064,7 +1076,7 @@ def dedup_prefixfilter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pref = session_cached(
         spark,
         frame_memo_tag(sf_dir, "ppjoin_prefix"),
-        ranked.where(F.col("pos") <= F.expr("sz DIV 2 + 1")).select(
+        lambda: ranked.where(F.col("pos") <= F.expr("sz DIV 2 + 1")).select(
             "doc_id", "sz", "shingle"
         ),
     )
@@ -1319,7 +1331,7 @@ def _dupspan_frames(
     base = session_cached(
         spark,
         frame_memo_tag(sf_dir, "dupspan_base"),
-        docs.select(
+        lambda: docs.select(
             "doc_id",
             F.expr(f"size({toks})").cast("bigint").alias("n_tokens"),
             F.expr(th.reduced_token_hashes(toks, th.SPARK)).alias("th_arr"),
@@ -1353,7 +1365,7 @@ def _dupspan_frames(
     dup_occ = session_checkpointed(
         spark,
         frame_memo_tag(sf_dir, "dupspan_dup_occ"),
-        occ.join(dup, "h", "left_semi"),
+        lambda: occ.join(dup, "h", "left_semi"),
     )
     return base, dup_occ
 
@@ -1542,7 +1554,7 @@ def split_leakage_neardup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # construction (each bench repeat), not just once per session.
     )
     labeled = session_checkpointed(
-        spark, frame_memo_tag(sf_dir, "split_leakage_labeled"), labeled
+        spark, frame_memo_tag(sf_dir, "split_leakage_labeled"), lambda: labeled
     )
     pair_stats = labeled.groupBy("split_lo", "split_hi").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
@@ -2005,7 +2017,9 @@ def source_shingle_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
     toks = th.tokens("text", th.SPARK)
     sh = session_cached(
-        spark, frame_memo_tag(sf_dir, "kmv_shingle_sets"), _kmv_shingle_rows(docs)
+        spark,
+        frame_memo_tag(sf_dir, "kmv_shingle_sets"),
+        lambda: _kmv_shingle_rows(docs),
     )
     exact = sh.groupBy("source").agg(F.count("*").alias("n"))
     sk = _kmv_sketches(sh)
@@ -2057,15 +2071,6 @@ def source_shingle_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMV_REPLAY: dict[tuple, str] = {}
-
-
-def _kmv_scratch_dir() -> str:
-    from end2end_data_pipeline_spark.sources.tables import run_scratch_dir
-
-    return run_scratch_dir("spark_graft_kmv_stream_")
-
-
 @query("source_sketch_stream_replay", oracle=_kmv_oracle_sql(False))
 def source_sketch_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch maintenance ON THE STREAMING ENGINE: documents
@@ -2088,11 +2093,15 @@ def source_sketch_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is a commutative monoid; the replay demonstrates exactly
     that."""
     import os as _os
+    import shutil
 
-    key = model_memo_key(spark, sf_dir, "documents")
-    state_path = _KMV_REPLAY.get(key)
-    if state_path is None:
-        scratch = _kmv_scratch_dir()
+    def build() -> str:
+        scratch = session_scratch(
+            spark, f"kmv_stream_{sf_tag(_os.path.abspath(sf_dir))}"
+        )
+        # a fresh split, state and checkpoint per build: a regenerated
+        # fixture must not resume the previous drain
+        shutil.rmtree(scratch, ignore_errors=True)
         splits = _os.path.join(scratch, "splits")
         ckpt = _os.path.join(scratch, "ckpt")
         docs = load_table(spark, sf_dir, "documents")
@@ -2131,8 +2140,13 @@ def source_sketch_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        state_path = final_state[0]
-        _KMV_REPLAY[key] = state_path
+        return final_state[0]
+
+    state_path = session_memo(
+        spark,
+        ("source_sketch_stream_replay", *model_memo_key(sf_dir, "documents")),
+        build,
+    )
     state = spark.read.parquet(state_path)
     return (
         _kmv_pair_scores(_kmv_sketches(state))

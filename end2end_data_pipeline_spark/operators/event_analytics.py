@@ -33,7 +33,6 @@ from end2end_data_pipeline_spark.sources.tables import (
     frame_memo_tag,
     load_table,
     session_cached,
-    sf_tag,
 )
 
 # Error classification threshold on props.k (uniform 0..99 → ~25% errors).
@@ -958,8 +957,6 @@ def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two tiny aggregations (O(|event_types|) rows each) broadcast
     back onto the fact scan — the events table itself never shuffles;
     each pass is a map-side partial aggregate plus a broadcast join."""
-    import os
-
     ev = load_table(spark, sf_dir, "events")
     # med feeds BOTH the MAD pass and the final filter — session-cache
     # the O(types) rollup so the fact is scanned three times (the
@@ -967,8 +964,8 @@ def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocations reuse ONE InMemoryRelation
     med = session_cached(
         spark,
-        f"outlier_med_{sf_tag(os.path.abspath(sf_dir))}",
-        ev.groupBy("event_type").agg(
+        frame_memo_tag(sf_dir, "outlier_med"),
+        lambda: ev.groupBy("event_type").agg(
             F.expr("percentile(value, 0.5)").alias("med")
         ),
     )
@@ -1171,7 +1168,7 @@ def user_stickiness_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     active = session_cached(
         spark,
         frame_memo_tag(sf_dir, "user_day_distinct"),
-        ev.select("user_id", F.to_date("ts").alias("day")).distinct(),
+        lambda: ev.select("user_id", F.to_date("ts").alias("day")).distinct(),
     )
     spine = F.broadcast(active.select("day").distinct().alias("s"))
     a = active.alias("a")
@@ -1284,7 +1281,7 @@ def event_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ut = session_cached(
         spark,
         frame_memo_tag(sf_dir, "user_type_distinct"),
-        ev.select("user_id", "event_type").distinct(),
+        lambda: ev.select("user_id", "event_type").distinct(),
     )
     n_users = ut.agg(F.count_distinct("user_id").alias("n"))
     type_counts = ut.groupBy("event_type").agg(F.count("*").alias("n_type"))
@@ -1481,8 +1478,6 @@ def _backtest_roll(spark: SparkSession, sf_dir: str):
     """The (prev, nxt, side) pair rollup behind the Markov backtest —
     session-cached under one tag so the hit-rate and reliability
     queries share a single build of the user-window pass."""
-    import os
-
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2")
@@ -1508,8 +1503,8 @@ def _backtest_roll(spark: SparkSession, sf_dir: str):
     # total/test branches would each re-run the user window otherwise
     return session_cached(
         spark,
-        f"backtest_roll_{sf_tag(os.path.abspath(sf_dir))}",
-        pairs.groupBy("prev", "nxt", "side")
+        frame_memo_tag(sf_dir, "backtest_roll"),
+        lambda: pairs.groupBy("prev", "nxt", "side")
         .agg(F.count("*").cast("bigint").alias("n"))
         .coalesce(1),
     )

@@ -33,10 +33,10 @@ from end2end_data_pipeline_spark.operators.affinity import (
 )
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     session_cached,
     session_checkpointed,
-    sf_tag,
 )
 
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale (10^12)
@@ -141,19 +141,18 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.sum(cents).alias("w"))
     )
-    import os
-
-    tag = sf_tag(os.path.abspath(sf_dir))
     # edges feeds the out-weight rollup AND the share join — cached so
     # the fact scan happens once at build
-    edges = session_cached(spark, f"pagerank_edges_{tag}", edges)
+    edges = session_cached(
+        spark, frame_memo_tag(sf_dir, "pagerank_edges"), lambda: edges
+    )
     outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
     # session-cached: re-read every one of the 8 iterations; repeats
     # share ONE InMemoryRelation per frame (the bare-cache leak fix)
     eshare = session_cached(
         spark,
-        f"pagerank_eshare_{tag}",
-        edges.join(F.broadcast(outw), "src").select(
+        frame_memo_tag(sf_dir, "pagerank_eshare"),
+        lambda: edges.join(F.broadcast(outw), "src").select(
             "src",
             "dst",
             F.expr(f"w * {W_SHARE_SCALE} div wout").cast("bigint").alias("wshare"),
@@ -162,7 +161,9 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-read every iteration for the teleport left join (a 25-row
     # dim, so this trims file-listing overhead, not data volume)
     nodes = session_cached(
-        spark, f"pagerank_nodes_{tag}", n.select(F.col("n_name").alias("node"))
+        spark,
+        frame_memo_tag(sf_dir, "pagerank_nodes"),
+        lambda: n.select(F.col("n_name").alias("node")),
     )
     ranks = nodes.select(
         "node", F.lit(PR_SCALE // N_NATIONS).cast("bigint").alias("rank")
@@ -186,8 +187,8 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # mostly planning); each round is O(|nations|) rows.
         ranks = session_checkpointed(
             spark,
-            f"pagerank_r{k + 1}_{tag}",
-            nodes.join(F.broadcast(contribs), "node", "left").select(
+            frame_memo_tag(sf_dir, f"pagerank_r{k + 1}"),
+            lambda: nodes.join(F.broadcast(contribs), "node", "left").select(
                 "node",
                 (F.lit(TELEPORT) + F.coalesce(F.col("contrib"), F.lit(0)))
                 .cast("bigint")
@@ -421,12 +422,10 @@ def nation_supply_latency_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-empty partitions every relaxation round. Only aug is
     # cached: edges has no other consumer (r9 review — a second cache
     # there was a dead copy of near-identical data).
-    import os
-
     aug = session_cached(
         spark,
-        f"sp_aug_{sf_tag(os.path.abspath(sf_dir))}",
-        edges.unionAll(
+        frame_memo_tag(sf_dir, "sp_aug"),
+        lambda: edges.unionAll(
             n.select(
                 F.col("n_name").alias("src"),
                 F.col("n_name").alias("dst"),
@@ -521,8 +520,6 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins against the shrinking survivor set — the synchronous
     peel step as join+groupBy, O(|edges|) per round, no driver-side
     graph state. The census rows are four 1-row aggregates."""
-    import os
-
     edges = copurchase_sym_edges(spark, sf_dir)
     stats = []
     for r in range(KCORE_ROUNDS):
@@ -545,8 +542,8 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 0.35-0.45 s checkpointed, identical rows).
         edges = session_checkpointed(
             spark,
-            f"kcore_e{r + 1}_{sf_tag(os.path.abspath(sf_dir))}",
-            edges.join(keep, edges["u"] == keep["node"], "left_semi").join(
+            frame_memo_tag(sf_dir, f"kcore_e{r + 1}"),
+            lambda: edges.join(keep, edges["u"] == keep["node"], "left_semi").join(
                 keep.select(F.col("node").alias("vnode")),
                 F.col("v") == F.col("vnode"),
                 "left_semi",
@@ -638,13 +635,11 @@ def part_copurchase_assortativity(
     lookups are two equi-joins keyed on the node id; the correlation
     reduces to ONE row of exact integer sums, cast to double once in
     the fixed-shape r expression."""
-    import os
-
     edges = copurchase_sym_edges(spark, sf_dir)
     deg = session_cached(
         spark,
-        f"kcore_deg_{sf_tag(os.path.abspath(sf_dir))}",
-        edges.groupBy(F.col("u").alias("node"))
+        frame_memo_tag(sf_dir, "kcore_deg"),
+        lambda: edges.groupBy(F.col("u").alias("node"))
         .agg(F.count("*").cast("bigint").alias("d"))
         .coalesce(8),
     )

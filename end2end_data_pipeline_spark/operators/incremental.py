@@ -49,9 +49,9 @@ from end2end_data_pipeline_spark.operators.dedup import (
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
     fan_out,
+    frame_memo_tag,
     load_table,
     session_cached,
-    sf_tag,
 )
 
 # Deterministic snapshot split of the fixture corpus: 3/4 prior, 1/4 new.
@@ -165,19 +165,24 @@ def _snapshots(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 
 def _decisions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     prior, batch = _snapshots(spark, sf_dir)
     # in production the two stores are PERSISTED tables; the fixture
     # derives them from the prior snapshot per call, so session-cache
     # them — the minhash store feeds both the band join and the verify
     # join, and uncached each use re-fingerprints the whole prior
     # corpus (repeats share ONE InMemoryRelation per store)
-    tag = sf_tag(os.path.abspath(sf_dir))
     return incremental_decisions(
         batch,
-        session_cached(spark, f"incr_exact_store_{tag}", exact_store_for(prior)),
-        session_cached(spark, f"incr_sig_store_{tag}", signatures_for(prior)),
+        session_cached(
+            spark,
+            frame_memo_tag(sf_dir, "incr_exact_store"),
+            lambda: exact_store_for(prior),
+        ),
+        session_cached(
+            spark,
+            frame_memo_tag(sf_dir, "incr_sig_store"),
+            lambda: signatures_for(prior),
+        ),
     )
 
 

@@ -18,20 +18,19 @@ never dropped, never double-counted — are hash-checked too; the
 corrupt payloads are module constants, so their counts/lengths appear
 in the oracles as literals derived from the same constants.
 
-Fixtures are built once per (SparkSession, sf_dir) into the system
-temp dir and reused (same lifecycle as ``bucketed._BUCKETED``); the
+Fixtures are built once per (Spark application, sf_dir) into the
+application's scratch dir and reused (same lifecycle as
+``bucketed.bucketed_orders_lineitem``); the
 driver-side build collects only the bounded slices used by the
 fixtures (≤200 rows), documented O(k) like the kmeans seed collect.
 """
 
 from __future__ import annotations
 
-import atexit
-import itertools
+import functools
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +41,14 @@ from end2end_data_pipeline_spark.operators.multimodal import (
 )
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.jsonl import read_jsonl_docs
-from end2end_data_pipeline_spark.sources.tables import load_table
+from end2end_data_pipeline_spark.sources.tables import (
+    drain_to_memory,
+    frame_memo_tag,
+    load_table,
+    session_memo,
+    session_scratch,
+    sf_tag,
+)
 from end2end_data_pipeline_spark.sources.webdataset import (
     read_tar_shards_unified,
     stream_tar_shards_unified,
@@ -57,34 +63,42 @@ WDS_SHARD_SIZE = 40         # samples per shard -> shard_idx = doc_id // 40
 # Fails tarfile header parse on open -> exactly one dead-letter row.
 WDS_CORRUPT_BYTES = b"this is not a tar archive " * 24
 
-# (applicationId, abs sf_dir, fixture kind) -> fixture dir
-_FIXTURES: dict[tuple[str, str, str], str] = {}
+
+def _session_fixture(kind: str):
+    """Turn ``write(spark, sf_dir, out)`` into ``fixture(spark, sf_dir)
+    -> out``: the fixture is written once per (application, sf_dir)
+    into a fresh directory under the application's scratch root."""
+
+    def wrap(write):
+        @functools.wraps(write)
+        def fixture(spark: SparkSession, sf_dir: str) -> str:
+            def build() -> str:
+                out = session_scratch(
+                    spark, f"{kind}_{sf_tag(os.path.abspath(sf_dir))}"
+                )
+                # a build that raised may have left a partial copy
+                shutil.rmtree(out, ignore_errors=True)
+                os.makedirs(out)
+                write(spark, sf_dir, out)
+                return out
+
+            return session_memo(
+                spark,
+                frame_memo_tag(sf_dir, f"{kind}_fixture"),
+                build,
+                valid=os.path.isdir,
+            )
+
+        return fixture
+
+    return wrap
 
 
-def _fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str | None:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
-    out = _FIXTURES.get(key)
-    if out is not None and os.path.isdir(out):
-        return out
-    return None
-
-
-def _remember(spark: SparkSession, sf_dir: str, kind: str, out: str) -> str:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
-    _FIXTURES[key] = out
-    # fixture dirs live in the system temp dir; reclaim them when the
-    # python process exits instead of leaking across sessions
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return out
-
-
-def _webdataset_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("wds")
+def _webdataset_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Pack doc_id < WDS_DOC_LIMIT as (key.txt, key.lang) tar members
     in WDS_SHARD_SIZE-sample shards, plus one deliberately unreadable
     shard. Bounded collect: ≤WDS_DOC_LIMIT rows."""
-    cached = _fixture_dir(spark, sf_dir, "wds")
-    if cached:
-        return cached
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < WDS_DOC_LIMIT)
@@ -117,11 +131,9 @@ def _webdataset_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
         for r in docs
     ]
-    out = tempfile.mkdtemp(prefix="spark_graft_wds_")
     write_tar_shards(samples, out, shard_size=WDS_SHARD_SIZE)
     with open(os.path.join(out, "shard-bad.tar"), "wb") as f:
         f.write(WDS_CORRUPT_BYTES)
-    return _remember(spark, sf_dir, "wds", out)
 
 
 def _audit_members_by_shard(
@@ -229,14 +241,12 @@ JSONL_SCHEMA = T.StructType(
 )
 
 
-def _jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("jsonl")
+def _jsonl_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Serialize doc_id < JSONL_DOC_LIMIT as JSON lines plus the five
     corrupt lines, interleaved deterministically (one corrupt line
     after every 40th good line, remainder appended). Bounded collect:
     ≤JSONL_DOC_LIMIT rows."""
-    cached = _fixture_dir(spark, sf_dir, "jsonl")
-    if cached:
-        return cached
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < JSONL_DOC_LIMIT)
@@ -261,10 +271,8 @@ def _jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
         if (i + 1) % 40 == 0 and corrupt:
             lines.append(corrupt.pop(0))
     lines.extend(corrupt)
-    out = tempfile.mkdtemp(prefix="spark_graft_jsonl_")
     with open(os.path.join(out, "corpus.jsonl"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + ("\n" if lines else ""))
-    return _remember(spark, sf_dir, "jsonl", out)
 
 
 def _jsonl_rollup(good: DataFrame, dead_lines: DataFrame) -> DataFrame:
@@ -399,12 +407,6 @@ def audio_pcm_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_audio_features(payloads).orderBy("doc_id")
 
 
-# (applicationId, abs sf_dir, fixture dir) -> memory-sink table of
-# streamed members
-_WDS_REPLAY: dict[tuple[str, str, str], str] = {}
-_WDS_REPLAY_IDS = itertools.count()
-
-
 @query(
     # IDENTICAL oracle to the batch roundtrip: the streaming engine
     # must land byte-for-byte what the batch reader sees.
@@ -423,27 +425,17 @@ def webdataset_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle the batch one has (pattern:
     ``warehouse_ops.minute_counts_stream_replay``)."""
     fix = _webdataset_fixture(spark, sf_dir)
-    # keyed on the fixture dir too: if the fixture is ever rebuilt at a
-    # new path (e.g. a tmp cleaner removed the old one), the memoized
-    # memory table from the stale fixture must not be served (ADVICE r8)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), fix)
-    table = _WDS_REPLAY.get(key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"wds_stream_replay_{next(_WDS_REPLAY_IDS)}"
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_wds_ckpt", key[0], table
-        )
-        q = (
-            stream_tar_shards_unified(spark, fix, glob="*.tar")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _WDS_REPLAY[key] = table
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "webdataset_stream_replay"),
+        lambda: drain_to_memory(
+            spark,
+            "wds_stream_replay",
+            stream_tar_shards_unified(spark, fix, glob="*.tar"),
+            "append",
+        ),
+        valid=spark.catalog.tableExists,
+    )
     return _audit_members_by_shard(spark, spark.table(table), sf_dir)
 
 
@@ -527,21 +519,17 @@ ORC_PARTS = 3
 ORC_TS_OFFSET_US = 654_321  # micros-since-epoch = doc_id*1e6 + offset
 
 
-def _orc_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("orc")
+def _orc_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Write doc_id < ORC_DOC_LIMIT through Spark's native ORC sink
     (distributed, ORC_PARTS files) with a derived timestamp column so
     ORC's timestamp encoding rides the roundtrip."""
-    cached = _fixture_dir(spark, sf_dir, "orc")
-    if cached:
-        return cached
-    out = tempfile.mkdtemp(prefix="spark_graft_orc_")
     (
         _ts_docs_frame(spark, sf_dir, ORC_DOC_LIMIT, ORC_TS_OFFSET_US)
         .repartition(ORC_PARTS, "doc_id")
         .write.mode("overwrite")
         .orc(out)
     )
-    return _remember(spark, sf_dir, "orc", out)
 
 
 @query(
@@ -574,14 +562,11 @@ XML_TS_OFFSET_US = 777_001
 XML_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 
-def _xml_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("xml")
+def _xml_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Write doc_id < XML_DOC_LIMIT through Spark 4's NATIVE XML sink
     (the spark-xml package folded into core) — distributed, XML_PARTS
     files, one <doc> row element per document."""
-    cached = _fixture_dir(spark, sf_dir, "xml")
-    if cached:
-        return cached
-    out = tempfile.mkdtemp(prefix="spark_graft_xml_")
     (
         _ts_docs_frame(spark, sf_dir, XML_DOC_LIMIT, XML_TS_OFFSET_US)
         .repartition(XML_PARTS, "doc_id")
@@ -594,7 +579,6 @@ def _xml_fixture(spark: SparkSession, sf_dir: str) -> str:
         .option("timestampFormat", XML_TS_FORMAT)
         .save(out)
     )
-    return _remember(spark, sf_dir, "xml", out)
 
 
 @query(
@@ -789,12 +773,6 @@ def video_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, abs sf_dir, fixture dir) -> memory-sink table of
-# streamed lines
-_JSONL_REPLAY: dict[tuple[str, str, str], str] = {}
-_JSONL_REPLAY_IDS = itertools.count()
-
-
 @query(
     # IDENTICAL oracle to the batch quarantine stats: streamed lines
     # must parse and quarantine exactly as the batch reader's do.
@@ -816,28 +794,19 @@ def jsonl_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fix = _jsonl_fixture(spark, sf_dir)
-    # fixture dir in the key for the same stale-memo reason as
-    # ``webdataset_stream_replay``
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), fix)
-    table = _JSONL_REPLAY.get(key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"jsonl_stream_replay_{next(_JSONL_REPLAY_IDS)}"
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_jsonl_ckpt", key[0], table
-        )
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "jsonl_stream_replay"),
         # file-stream sources take a DIRECTORY (files land, the source
         # discovers them); the fixture dir holds only corpus.jsonl
-        q = (
-            stream_jsonl_docs(spark, fix, JSONL_SCHEMA)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _JSONL_REPLAY[key] = table
+        lambda: drain_to_memory(
+            spark,
+            "jsonl_stream_replay",
+            stream_jsonl_docs(spark, fix, JSONL_SCHEMA),
+            "append",
+        ),
+        valid=spark.catalog.tableExists,
+    )
     parsed = spark.table(table)
     good = parsed.where(~F.col("is_corrupt")).select("lang", "text", "n_chars")
     dead = parsed.where(F.col("is_corrupt")).select(
@@ -869,7 +838,8 @@ CSV_SCHEMA = T.StructType(
 )
 
 
-def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("csv")
+def _csv_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Serialize doc_id < CSV_DOC_LIMIT as RFC-4180 CSV (QUOTE_ALL, so
     every field rides the quote/dequote path) plus the four corrupt
     lines, one interleaved after every 50th good line. Bounded
@@ -877,9 +847,6 @@ def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
     import csv
     import io
 
-    cached = _fixture_dir(spark, sf_dir, "csv")
-    if cached:
-        return cached
     # NULL text is excluded: RFC-4180 has no NULL — csv.writer would
     # serialize None as "" and the read-back could not distinguish a
     # null doc from an empty one (r13 null-flood sweep); the oracle
@@ -911,10 +878,8 @@ def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
         if (i + 1) % 50 == 0 and corrupt:
             lines.append(corrupt.pop(0))
     lines.extend(corrupt)
-    out = tempfile.mkdtemp(prefix="spark_graft_csv_")
     with open(os.path.join(out, "corpus.csv"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + ("\n" if lines else ""))
-    return _remember(spark, sf_dir, "csv", out)
 
 
 @query(
@@ -953,11 +918,6 @@ def csv_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, abs sf_dir, fixture dir) -> memory-sink table
-_CSV_REPLAY: dict[tuple[str, str, str], str] = {}
-_CSV_REPLAY_IDS = itertools.count()
-
-
 @query(
     # IDENTICAL oracle to the batch stats: streamed CSV files must
     # parse and quarantine exactly as the batch reader's do.
@@ -976,24 +936,17 @@ def csv_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end2end_data_pipeline_spark.sources.jsonl import CORRUPT_COL
 
     fix = _csv_fixture(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), fix)
-    table = _CSV_REPLAY.get(key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"csv_stream_replay_{next(_CSV_REPLAY_IDS)}"
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_csv_ckpt", key[0], table
-        )
-        q = (
-            stream_csv_docs(spark, fix, CSV_SCHEMA)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _CSV_REPLAY[key] = table
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "csv_stream_replay"),
+        lambda: drain_to_memory(
+            spark,
+            "csv_stream_replay",
+            stream_csv_docs(spark, fix, CSV_SCHEMA),
+            "append",
+        ),
+        valid=spark.catalog.tableExists,
+    )
     parsed = spark.table(table)
     good = parsed.where(~F.col("is_corrupt")).select("lang", "text", "n_chars")
     dead = parsed.where(F.col("is_corrupt")).select(
@@ -1009,14 +962,12 @@ SKEW_SHARD_SIZE = 16
 SKEW_N_PARTITIONS = 4
 
 
-def _skew_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("skew")
+def _skew_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Write doc_id < SKEW_DOC_LIMIT through the DISTRIBUTED shard
     writer (``write_tar_shards_distributed``): samples are built as a
     DataFrame straight from ``documents`` (no driver collect — the
     writer is the thing under test and it packs executor-side)."""
-    cached = _fixture_dir(spark, sf_dir, "skew")
-    if cached:
-        return cached
     samples = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < SKEW_DOC_LIMIT)
@@ -1030,14 +981,12 @@ def _skew_fixture(spark: SparkSession, sf_dir: str) -> str:
             ).alias("files"),
         )
     )
-    out = tempfile.mkdtemp(prefix="spark_graft_skew_")
     write_tar_shards_distributed(
         samples,
         out,
         shard_size=SKEW_SHARD_SIZE,
         n_partitions=SKEW_N_PARTITIONS,
     )
-    return _remember(spark, sf_dir, "skew", out)
 
 
 @query(
@@ -1135,7 +1084,8 @@ OCF_PARTS = 3
 OCF_TS_OFFSET_US = 123_456
 
 
-def _ocf_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("ocf")
+def _ocf_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Write doc_id < OCF_DOC_LIMIT through the distributed OCF writer
     (``write_avro_ocf``, deflate codec, one .avro per partition). The
     frame adds a timestamp column derived from doc_id so the
@@ -1143,15 +1093,10 @@ def _ocf_fixture(spark: SparkSession, sf_dir: str) -> str:
     collect is O(OCF_PARTS)."""
     from end2end_data_pipeline_spark.sources.avro_frames import write_avro_ocf
 
-    cached = _fixture_dir(spark, sf_dir, "ocf")
-    if cached:
-        return cached
     df = _ts_docs_frame(
         spark, sf_dir, OCF_DOC_LIMIT, OCF_TS_OFFSET_US
     ).repartition(OCF_PARTS, "doc_id")
-    out = tempfile.mkdtemp(prefix="spark_graft_ocf_")
     write_avro_ocf(df, out, codec="deflate").collect()
-    return _remember(spark, sf_dir, "ocf", out)
 
 
 @query(
@@ -1194,20 +1139,17 @@ SEVO_DOC_LIMIT = 80   # docs in the fixture (dense-prefix contract)
 SEVO_BATCH = 40       # docs per writer generation
 
 
-def _schema_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
+@_session_fixture("sevo")
+def _schema_evolution_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Two writer generations into ONE parquet directory: generation 1
     writes (doc_id, text_len); generation 2 adds a ``lang`` column —
     the additive schema evolution every long-lived ingest pipeline
     eventually performs. Pure distributed writes, no collect."""
-    cached = _fixture_dir(spark, sf_dir, "sevo")
-    if cached:
-        return cached
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < SEVO_DOC_LIMIT)
         .select("doc_id", F.length("text").alias("text_len"), "lang")
     )
-    out = tempfile.mkdtemp(prefix="spark_graft_sevo_")
     (
         docs.where(F.col("doc_id") < SEVO_BATCH)
         .select("doc_id", "text_len")
@@ -1222,7 +1164,6 @@ def _schema_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("append")
         .parquet(out)
     )
-    return _remember(spark, sf_dir, "sevo", out)
 
 
 @query(

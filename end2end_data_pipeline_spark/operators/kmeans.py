@@ -33,9 +33,11 @@ from end2end_data_pipeline_spark.functions import vectors as vec
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
     fan_out,
+    frame_memo_tag,
     load_table,
     model_memo_key,
     session_cached,
+    session_memo,
 )
 
 K = 8
@@ -77,9 +79,6 @@ def _fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fit_model(spark, sf_dir)[0]
 
 
-_FIT_MEMO: dict[tuple, dict[int, list[int]]] = {}
-
-
 def _fit_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, dict[int, list[int]]]:
@@ -89,16 +88,15 @@ def _fit_model(
     (application, sf_dir): four registry queries share the fit, and
     re-running ITERS x (K x dim collect) training rounds per query
     repaid the whole training cost each time."""
-    memo_key = model_memo_key(spark, sf_dir, "embeddings")
     base = session_cached(
         spark,
-        f"kmeans_qbase:{sf_dir}",
+        frame_memo_tag(sf_dir, "kmeans_qbase"),
         # NULL embeddings (a source that never filled the column) are
         # excluded from clustering — they cannot seed, cannot be
         # assigned, and a NULL seed crashed the centroid collect
         # (caught by the r13 null-flood sweep); the oracle q CTE
         # carries the same IS NOT NULL
-        fan_out(spark, load_table(spark, sf_dir, "embeddings"))
+        lambda: fan_out(spark, load_table(spark, sf_dir, "embeddings"))
         .where(F.col("embedding").isNotNull())
         .select(
             "vec_id",
@@ -106,33 +104,14 @@ def _fit_model(
             F.expr(vec.quantize("embedding", th.SPARK)).alias("qv"),
         ),
     )
-    cached = _FIT_MEMO.get(memo_key)
-    if cached is not None:
-        if not cached:
-            return (
-                base.select(
-                    "vec_id",
-                    "label",
-                    "qv",
-                    F.lit(None).cast("bigint").alias("cluster"),
-                    F.lit(None).cast("bigint").alias("dist2"),
-                ),
-                cached,
-            )
-        return (
-            _assign(base, cached).select(
-                "vec_id", "label", "qv", "cluster", "dist2"
-            ),
-            cached,
-        )
-    centroids = {
-        int(r["vec_id"]): [int(x) for x in r["qv"]]
-        for r in base.where(F.col("vec_id") < K).collect()
-    }
+    centroids = session_memo(
+        spark,
+        ("kmeans_fit", *model_memo_key(sf_dir, "embeddings")),
+        lambda: _train_centroids(base),
+    )
     if not centroids:
         # empty corpus: no seeds exist, the argmin expression would be
         # untyped — return the schema-stable empty assignment instead
-        _FIT_MEMO[memo_key] = centroids
         return (
             base.select(
                 "vec_id",
@@ -143,6 +122,23 @@ def _fit_model(
             ),
             centroids,
         )
+    return (
+        _assign(base, centroids).select(
+            "vec_id", "label", "qv", "cluster", "dist2"
+        ),
+        centroids,
+    )
+
+
+def _train_centroids(base: DataFrame) -> dict[int, list[int]]:
+    """ITERS Lloyd's rounds seeded with vectors vec_id < K; an empty
+    corpus has no seeds and trains to ``{}``."""
+    centroids = {
+        int(r["vec_id"]): [int(x) for x in r["qv"]]
+        for r in base.where(F.col("vec_id") < K).collect()
+    }
+    if not centroids:
+        return centroids
     for _ in range(ITERS):
         sums = (
             _assign(base, centroids)
@@ -164,13 +160,7 @@ def _fit_model(
                     (s + n * SHIFT) // n - SHIFT
                     for _, (s, n) in sorted(comp.items())
                 ]
-    _FIT_MEMO[memo_key] = centroids
-    return (
-        _assign(base, centroids).select(
-            "vec_id", "label", "qv", "cluster", "dist2"
-        ),
-        centroids,
-    )
+    return centroids
 
 
 def _kmeans_ctes() -> str:

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     session_cached,
-    sf_tag,
 )
 
 ZBITS = 6  # 6 bits per dimension -> 64x64 bucket grid, 12-bit z-space
@@ -173,8 +173,8 @@ def lineitem_zorder_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     graded = session_cached(
         spark,
-        f"zorder_graded_{sf_tag(os.path.abspath(sf_dir))}",
-        cells.select(
+        frame_memo_tag(sf_dir, "zorder_graded"),
+        lambda: cells.select(
             "xb",
             "yb",
             "n",

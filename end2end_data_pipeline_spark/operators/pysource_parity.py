@@ -27,14 +27,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.registry import ORACLE, query
+from end2end_data_pipeline_spark.sources.tables import (
+    drain_to_memory,
+    session_memo,
+)
 
 SYNTH_N_ROWS = 10_000
 SYNTH_N_PARTS = 8
 SYNTH_N_USERS = 1_000
 SYNTH_VALUE_MOD = 100_000  # value in integer cents
 SYNTH_TYPES = ("view", "click", "purchase", "error")
-
-_REGISTERED: set[str] = set()  # applicationIds with the source registered
 
 
 def _pmd5(s: str) -> int:
@@ -50,6 +52,15 @@ def synth_row(i: int) -> tuple[int, int, str, int]:
     etype = SYNTH_TYPES[_pmd5(f"ty:{i}") % len(SYNTH_TYPES)]
     cents = _pmd5(f"va:{i}") % SYNTH_VALUE_MOD
     return (i, user_id, etype, cents)
+
+
+def _register_source(spark: SparkSession) -> None:
+    """Register the ``synthevents`` source once per application."""
+    session_memo(
+        spark,
+        "synthevents_source",
+        lambda: spark.dataSource.register(_make_datasource()),
+    )
 
 
 def _make_datasource():
@@ -170,10 +181,7 @@ def python_datasource_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver involvement past planning; the same class mounts any
     bespoke feed with real partition parallelism. Value stays integer
     cents end to end — no float crosses the hash boundary."""
-    app = spark.sparkContext.applicationId
-    if app not in _REGISTERED:
-        spark.dataSource.register(_make_datasource())
-        _REGISTERED.add(app)
+    _register_source(spark)
     feed = (
         spark.read.format("synthevents")
         .option("n_rows", SYNTH_N_ROWS)
@@ -198,10 +206,6 @@ python_datasource_parity.__doc__ = python_datasource_parity.__doc__.replace(
 )
 
 
-_STREAM_TABLES: dict[str, str] = {}  # applicationId -> memory-sink table
-_STREAM_IDS = iter(range(10**6))
-
-
 @query(
     "python_datasource_stream_parity",
     # IDENTICAL oracle to the batch parity: the stream drain of the
@@ -219,19 +223,9 @@ def python_datasource_stream_parity(
     ``python_datasource_parity`` this covers both halves of the
     Spark 4 Python source API (plan/partition batch scan + offset
     commit streaming scan)."""
-    import os
-    import tempfile
+    _register_source(spark)
 
-    app = spark.sparkContext.applicationId
-    if app not in _REGISTERED:
-        spark.dataSource.register(_make_datasource())
-        _REGISTERED.add(app)
-    table = _STREAM_TABLES.get(app)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"pysource_stream_{next(_STREAM_IDS)}"
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", app, table
-        )
+    def build() -> str:
         feed = (
             spark.readStream.format("synthevents")
             .option("n_rows", SYNTH_N_ROWS)
@@ -244,16 +238,14 @@ def python_datasource_stream_parity(
             F.count("*").alias("n"),
             F.sum("value_cents").cast("bigint").alias("cents"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _STREAM_TABLES[app] = table
+        return drain_to_memory(spark, "pysource_stream", agg, "complete")
+
+    table = session_memo(
+        spark,
+        "python_datasource_stream_parity",
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .groupBy("event_type")

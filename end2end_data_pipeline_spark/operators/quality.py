@@ -25,10 +25,10 @@ from end2end_data_pipeline_spark.operators.similarity import (
 )
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     register_views,
     session_cached,
-    sf_tag,
 )
 
 
@@ -2215,14 +2215,12 @@ def orders_capacity_queue_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day")
     )
-    import os
-
     # session_cached: the bounds branch and the spine join both read
     # the rollup — without it orders scans twice; O(|days|) rows
     arr = session_cached(
         spark,
-        f"qsim_arr_{sf_tag(os.path.abspath(sf_dir))}",
-        o.groupBy("day")
+        frame_memo_tag(sf_dir, "qsim_arr"),
+        lambda: o.groupBy("day")
         .agg(F.count("*").cast("bigint").alias("a"))
         .coalesce(1),
     )
@@ -2461,8 +2459,6 @@ def event_minute_crosscorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded rows — the self-join keys on the shifted minute
     index against the session-cached spine frame, never on raw
     events."""
-    import os
-
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("minute", F.min("ts")).alias("tmin"),
@@ -2484,8 +2480,8 @@ def event_minute_crosscorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = session_cached(
         spark,
-        f"xcorr_spine_{XCORR_X}_{XCORR_Y}_{sf_tag(os.path.abspath(sf_dir))}",
-        spine.join(series(XCORR_X, "cx"), "em", "left")
+        frame_memo_tag(sf_dir, f"xcorr_spine_{XCORR_X}_{XCORR_Y}"),
+        lambda: spine.join(series(XCORR_X, "cx"), "em", "left")
         .join(series(XCORR_Y, "cy"), "em", "left")
         .select(
             "em",

@@ -36,18 +36,16 @@ is possible by construction — the test suite asserts the invariant.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     register_views,
     session_cached,
-    sf_tag,
 )
 
 # snapshot-B derivation cadences (coprime so the classes overlap the
@@ -220,13 +218,12 @@ def bloom_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bit build, actual-flag join, set-bit census) cost ONE orders scan
     between them and every join against them broadcasts; everything
     downstream is O(customers × k) narrow rows."""
-    tag = sf_tag(os.path.abspath(sf_dir))
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     members = session_cached(
         spark,
-        f"bloom_members_{tag}",
-        o.where(
+        frame_memo_tag(sf_dir, "bloom_members"),
+        lambda: o.where(
             F.expr("CAST(round(o_totalprice*100) AS BIGINT)")
             >= F.lit(MEMBER_CENTS)
         )
@@ -235,8 +232,8 @@ def bloom_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     setbits = session_cached(
         spark,
-        f"bloom_setbits_{tag}",
-        members.select(_spark_positions("ck").alias("pos")).distinct(),
+        frame_memo_tag(sf_dir, "bloom_setbits"),
+        lambda: members.select(_spark_positions("ck").alias("pos")).distinct(),
     )
     probes = c.select(
         F.col("c_custkey").alias("ck"),

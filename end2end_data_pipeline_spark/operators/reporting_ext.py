@@ -45,10 +45,10 @@ from end2end_data_pipeline_spark.operators.event_analytics import (
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
     fan_out,
+    frame_memo_tag,
     load_table,
     register_views,
     session_cached,
-    sf_tag,
 )
 
 # --- sweep-line session concurrency ----------------------------------
@@ -828,8 +828,6 @@ def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered. At index-serving scale the same scoring rides a
     pre-built (doc, term, tf) postings table pruned to the query
     terms."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
     ts = F.split(F.col("text"), " ")
 
@@ -844,8 +842,8 @@ def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # InMemoryRelation per invocation). One row per document.
     pd_df = session_cached(
         spark,
-        f"bm25_perdoc_{sf_tag(os.path.abspath(sf_dir))}",
-        docs.select(
+        frame_memo_tag(sf_dir, "bm25_perdoc"),
+        lambda: docs.select(
             "doc_id", F.size(ts).cast("bigint").alias("dl"), *tf_cols
         ),
     )

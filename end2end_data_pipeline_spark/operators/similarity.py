@@ -30,6 +30,8 @@ from end2end_data_pipeline_spark.sources.tables import (
     load_table,
     session_cached,
     session_checkpointed,
+    session_memo,
+    session_scratch,
     sf_tag,
 )
 
@@ -518,13 +520,9 @@ def ann_ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk(spark, sf_dir, nprobe=IVF_NPROBE)
 
 
-# (applicationId, abs sf_dir) -> (persisted index directory, schema)
-_IVF_INDEX: dict[tuple[str, str], tuple[str, object]] = {}
-
-
 def persisted_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inverted file AS STORAGE: the cell assignment materialized
-    once per (session, sf_dir) as parquet PARTITIONED BY cell_id —
+    once per (application, sf_dir) as parquet PARTITIONED BY cell_id —
     the build-once/probe-many layout real vector serving uses. Every
     probe then touches only its nprobe cell directories instead of
     the whole corpus (dynamic partition pruning; asserted in
@@ -534,25 +532,21 @@ def persisted_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey tables. Read back with an explicit schema so an empty
     corpus round-trips as an empty frame (no inference pass)."""
     import os as _os
-    import tempfile as _tempfile
 
-    sf_abs = _os.path.abspath(sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_abs)
-    cached = _IVF_INDEX.get(key)
-    if cached is not None and _os.path.isdir(cached[0]):
-        out, schema = cached
-    else:
+    def build() -> tuple[str, object]:
         # the assignment DAG is built only on the (re)build path; hot
         # calls reuse the memoized path+schema without re-analyzing it
         assigned = _ivf_assign(spark, sf_dir)
-        out = _os.path.join(
-            _tempfile.gettempdir(), "spark_graft_ivf", app_id,
-            sf_abs.strip("/").replace("/", "_"),
-        )
+        out = session_scratch(spark, f"ivf_{sf_tag(_os.path.abspath(sf_dir))}")
         assigned.write.mode("overwrite").partitionBy("cell_id").parquet(out)
-        schema = assigned.schema
-        _IVF_INDEX[key] = (out, schema)
+        return out, assigned.schema
+
+    out, schema = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "persisted_ivf_index"),
+        build,
+        valid=lambda entry: _os.path.isdir(entry[0]),
+    )
     return spark.read.schema(schema).parquet(out)
 
 
@@ -758,16 +752,14 @@ def centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: reuses the label_centroids aggregation (|labels| x dim int
     rows), then an O(|labels|^2 x dim) self-join on pos — tiny
     however large the corpus; nothing re-touches the raw vectors."""
-    import os
-
     emb = fan_out(spark, load_table(spark, sf_dir, "embeddings"))
     q = emb.select("label", F.expr(vec.quantize("embedding", vec.SPARK)).alias("qv"))
     # |labels| x dim frame feeding the norms and BOTH self-join sides —
     # session-cached so repeats share ONE InMemoryRelation
     sums = session_cached(
         spark,
-        f"centroid_sums_{sf_tag(os.path.abspath(sf_dir))}",
-        q.select("label", F.posexplode("qv").alias("pos0", "v"))
+        frame_memo_tag(sf_dir, "centroid_sums"),
+        lambda: q.select("label", F.posexplode("qv").alias("pos0", "v"))
         .groupBy("label", (F.col("pos0") + 1).alias("pos"))
         .agg(F.sum("v").alias("s")),
     )
@@ -1229,7 +1221,7 @@ def _pq_codes_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "pq_codes"),
-        scored.groupBy("vec_id", "cell_id", "subspace")
+        lambda: scored.groupBy("vec_id", "cell_id", "subspace")
         .agg(F.min(F.struct("d", "code")).alias("best"))
         .select(
             "vec_id",
@@ -1618,7 +1610,7 @@ def _pq_resid_codes_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "pq_resid_codes"),
-        scored.groupBy("vec_id", "cell_id", "subspace")
+        lambda: scored.groupBy("vec_id", "cell_id", "subspace")
         .agg(F.min(F.struct("d", "code")).alias("best"))
         .select(
             "vec_id", "cell_id", "subspace", F.col("best.code").alias("code")
@@ -2298,7 +2290,7 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized per (session, sf_dir): the bare checkpoint re-ran the
     # whole O(n x q x dims) pipeline eagerly on every construction
     ranked = session_checkpointed(
-        spark, frame_memo_tag(sf_dir, "mrl_ranked"), ranked
+        spark, frame_memo_tag(sf_dir, "mrl_ranked"), lambda: ranked
     )
     full_k = ranked.where(F.col("dim_budget") == MRL_DIMS[-1]).select(
         "query_id", "neighbor_id"

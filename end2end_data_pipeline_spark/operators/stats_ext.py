@@ -43,10 +43,10 @@ from end2end_data_pipeline_spark.functions.texthash import (
 )
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     register_views,
     session_cached,
-    sf_tag,
 )
 
 # Epoch anchoring the weekly / daily indexes: the corpus' first order
@@ -1038,14 +1038,12 @@ def orders_daily_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     attaches broadcast 1-row frames, and the output is a {MAD_TOP}-row
     TakeOrdered."""
     orders = load_table(spark, sf_dir, "orders")
-    import os
-
     # session_cached: the median branch and the deviation scan both
     # read it (otherwise the fact aggregation plans twice); O(|days|)
     daily = session_cached(
         spark,
-        f"mad_daily_{sf_tag(os.path.abspath(sf_dir))}",
-        orders.groupBy(
+        frame_memo_tag(sf_dir, "mad_daily"),
+        lambda: orders.groupBy(
             F.col("o_orderdate").cast("date").cast("string").alias("day")
         )
         .agg(F.expr(f"SUM({_CENTS})").cast("bigint").alias("rev_cents"))
@@ -1334,8 +1332,6 @@ def orders_weekly_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exploded from ONE collected array — the module's week-pair idiom,
     no self-join), the suffix-min is a window over it, and the fit is
     one bounded groupBy."""
-    import os
-
     orders = load_table(spark, sf_dir, "orders")
     wk = orders.groupBy(
         F.expr(f"datediff(o_orderdate, DATE'{EPOCH}') div 7").alias("week_idx")
@@ -1346,8 +1342,8 @@ def orders_weekly_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("week_idx")
     idx = session_cached(
         spark,
-        f"iso_weekly_{sf_tag(os.path.abspath(sf_dir))}",
-        wk.select(
+        frame_memo_tag(sf_dir, "iso_weekly"),
+        lambda: wk.select(
             "week_idx",
             "n_orders",
             "rev_cents",

@@ -26,7 +26,7 @@ from end2end_data_pipeline_spark.sources.tables import (
     load_table,
     model_memo_key,
     session_cached,
-    sf_tag,
+    session_memo,
 )
 
 STOPWORDS = ("the", "a", "of", "and", "is")
@@ -529,7 +529,7 @@ def _bigram_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached(
         spark,
         frame_memo_tag(sf_dir, "bigram_doc_counts"),
-        occ.groupBy("doc_id", "lang", "bigram")
+        lambda: occ.groupBy("doc_id", "lang", "bigram")
         .agg(F.count("*").alias("k"))
         .coalesce(input_scaled_partitions(sf_dir, "documents")),
     )
@@ -850,9 +850,6 @@ def _greedy_merge(col: str, l: str, r: str):
     )
 
 
-_BPE_MEMO: dict[tuple, list] = {}
-
-
 def _bpe_train(
     spark: SparkSession, sf_dir: str, snapshots: tuple[int, ...] = ()
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame, dict[int, DataFrame]]:
@@ -867,8 +864,8 @@ def _bpe_train(
     convention."""
     vocab = session_cached(
         spark,
-        f"bpe_seq_vocab:{sf_dir}",
-        fan_out(spark, load_table(spark, sf_dir, "documents"))
+        frame_memo_tag(sf_dir, "bpe_seq_vocab"),
+        lambda: fan_out(spark, load_table(spark, sf_dir, "documents"))
         .select(F.explode(F.split("text", " ")).alias("w"))
         .where((F.col("w") != "") & (~F.col("w").contains("|")))
         .groupBy("w")
@@ -877,20 +874,27 @@ def _bpe_train(
     )
     # the learned merge list is model state: memoize it per
     # (application, sf_dir) so the three BPE queries train ONCE —
-    # replaying cached merges is a lazy replace chain with zero
+    # replaying the merges is a lazy replace chain with zero
     # collects, where retraining pays BPE_STEPS argmax collects
-    memo_key = model_memo_key(spark, sf_dir, "documents")
-    cached = _BPE_MEMO.get(memo_key)
-    steps: list[tuple[int, str, str, str, int]] = []
+    steps = session_memo(
+        spark,
+        ("bpe_merges", *model_memo_key(sf_dir, "documents")),
+        lambda: _bpe_merges(vocab),
+    )
     snaps: dict[int, DataFrame] = {}
-    if cached is not None:
-        for step, l, r, _m, _n in cached:
-            vocab = vocab.withColumn("seq", _greedy_merge("seq", l, r))
-            if step in snapshots:
-                snaps[step] = vocab
-        for k in snapshots:
-            snaps.setdefault(k, vocab)
-        return list(cached), vocab, snaps
+    for step, l, r, _m, _n in steps:
+        vocab = vocab.withColumn("seq", _greedy_merge("seq", l, r))
+        if step in snapshots:
+            snaps[step] = vocab
+    for k in snapshots:  # census ran dry before k: vocab is final
+        snaps.setdefault(k, vocab)
+    return list(steps), vocab, snaps
+
+
+def _bpe_merges(vocab: DataFrame) -> list[tuple[int, str, str, str, int]]:
+    """Up to BPE_STEPS (step, left, right, merged, occurrences) merges
+    learned from the initial vocabulary frame (w, seq, freq)."""
+    steps: list[tuple[int, str, str, str, int]] = []
     for step in range(1, BPE_STEPS + 1):
         top = (
             vocab.select(
@@ -921,12 +925,7 @@ def _bpe_train(
         l, r, n = top[0]["l"], top[0]["r"], int(top[0]["n_occurrences"])
         steps.append((step, l, r, l + r, n))
         vocab = vocab.withColumn("seq", _greedy_merge("seq", l, r))
-        if step in snapshots:
-            snaps[step] = vocab
-    for k in snapshots:  # census ran dry before k: vocab is final
-        snaps.setdefault(k, vocab)
-    _BPE_MEMO[memo_key] = list(steps)
-    return steps, vocab, snaps
+    return steps
 
 
 @query("bpe_merge_steps", oracle=_bpe_steps_sql(BPE_STEPS))
@@ -1125,10 +1124,6 @@ def vocab_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MG_COUNTERS x n_partitions candidate rows; everything else stays
     map-side. Two scans total, the known lower bound for exact
     heavy hitters (candidate + verify)."""
-    import os
-
-    from end2end_data_pipeline_spark.sources.tables import session_cached
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("token")).where(
         F.col("token") != ""
@@ -1137,8 +1132,8 @@ def vocab_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the O(MG_COUNTERS x n_partitions) frame so the MG scan runs once
     summary = session_cached(
         spark,
-        f"mg_summary:{os.path.abspath(sf_dir)}",
-        tok.mapInPandas(_mg_candidates, "token string, n long"),
+        frame_memo_tag(sf_dir, "mg_summary"),
+        lambda: tok.mapInPandas(_mg_candidates, "token string, n long"),
     )
     candidates = (
         summary.where(F.col("token").isNotNull()).select("token").distinct()
@@ -1219,8 +1214,6 @@ def docs_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     window total, no scalar cross join. Top-k is a global sort of the
     vocab^2-bounded scored frame with a deterministic (lift, w1, w2)
     tiebreak."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(spark, docs).select(
         F.expr(th.tokens("text", th.SPARK)).alias("ts")
@@ -1238,8 +1231,8 @@ def docs_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = session_cached(
         spark,
-        f"pmi_counts_{sf_tag(os.path.abspath(sf_dir))}",
-        toks.select(F.explode(F.expr(emit)).alias("e"))
+        frame_memo_tag(sf_dir, "pmi_counts"),
+        lambda: toks.select(F.explode(F.expr(emit)).alias("e"))
         .groupBy(F.col("e.kind").alias("kind"), F.col("e.key").alias("key"))
         .agg(F.count("*").cast("bigint").alias("c"))
         .coalesce(1),

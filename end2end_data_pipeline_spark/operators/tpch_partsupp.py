@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     session_cached,
 )
@@ -66,21 +67,24 @@ def _partsupp_sql_duck() -> str:
 
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived partsupp frame, cached once per (session, sf_dir):
-    one distinct shuffle over lineitem's (partkey, suppkey) pairs,
-    then stateless per-row hash attributes."""
-    # no fan_out: the DISTINCT below shuffles lineitem by hash anyway,
-    # so a round-robin repartition ahead of it is a second full-fact
-    # shuffle for nothing (guide §2.4; r14 A/B on q9: 2x)
-    li = load_table(spark, sf_dir, "lineitem")
-    keys = li.select(
-        F.col("l_partkey").alias("ps_partkey"),
-        F.col("l_suppkey").alias("ps_suppkey"),
-    ).distinct()
-    return session_cached(
-        spark,
-        f"derived_partsupp:{sf_dir}",
-        keys.select(
+    """The derived partsupp frame, cached once per (application,
+    sf_dir): one distinct shuffle over lineitem's (partkey, suppkey)
+    pairs, then stateless per-row hash attributes. A hit reads no
+    table."""
+
+    def build() -> DataFrame:
+        # no fan_out: the DISTINCT below shuffles lineitem by hash
+        # anyway, so a round-robin repartition ahead of it is a second
+        # full-fact shuffle for nothing (guide §2.4; r14 A/B on q9: 2x)
+        keys = (
+            load_table(spark, sf_dir, "lineitem")
+            .select(
+                F.col("l_partkey").alias("ps_partkey"),
+                F.col("l_suppkey").alias("ps_suppkey"),
+            )
+            .distinct()
+        )
+        return keys.select(
             "ps_partkey",
             "ps_suppkey",
             (
@@ -89,8 +93,9 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
             (1 + F.expr(_ps_hash("psa", th.SPARK)) % PSA_MOD).alias(
                 "ps_availqty"
             ),
-        ),
-    )
+        )
+
+    return session_cached(spark, frame_memo_tag(sf_dir, "derived_partsupp"), build)
 
 
 _Q2_SIZE = 5

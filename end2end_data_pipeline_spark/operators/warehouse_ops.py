@@ -24,8 +24,9 @@ same batch SQL the stream goldens assert against
 the minutely Airflow DAG ``airflow/dags/spark.py:17-46`` closing each
 minute one minute late).
 
-Both materializations happen once per (SparkSession, sf_dir) into the
-system temp dir and are cached in module dicts — the same lifecycle as
+Both materializations happen once per (Spark application, sf_dir)
+into the application's scratch dir and are kept in the session-state
+registry (``sources/tables.py``) — the same lifecycle as
 ``operators/bucketed.py``. At 100 TB the warehouse write is the
 one-time layout investment the reference makes in ClickHouse's
 MergeTree; minute granularity is the reference's own choice (a real
@@ -34,15 +35,20 @@ deployment would size partitions to ~1 GB, e.g. hour/day + bucket).
 
 from __future__ import annotations
 
-import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.registry import ORACLE, query
-from end2end_data_pipeline_spark.sources.tables import load_table, sf_tag
+from end2end_data_pipeline_spark.sources.tables import (
+    drain_to_memory,
+    frame_memo_tag,
+    load_table,
+    session_memo,
+    session_scratch,
+    sf_tag,
+)
 
 # Fixed day-1 slice: every testdata SF spans 2024-01-01 .. 2024-01-30,
 # so the literal is deterministic across scale factors (TESTDATA.md).
@@ -51,12 +57,6 @@ SLICE_END = "2024-01-02 00:00:00"
 MINUTE_FMT = "yyyy-MM-dd_HH-mm"  # stays a STRING partition value
 # (a "yyyy-MM-dd HH:mm" key would be re-inferred as timestamp on
 # read-back, reopening the NTZ/timezone seam the engine closed in r4)
-
-# (applicationId, abs sf_dir) -> materialized path / memory-sink table
-_WAREHOUSE: dict[tuple[str, str], str] = {}
-_REPLAY: dict[tuple[str, str], str] = {}
-_REPLAY_IDS = itertools.count()
-
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the ``events`` table for the replay
@@ -89,26 +89,28 @@ def day1_minute_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per session+sf) the day-1 events slice in the
     reference's warehouse layout: PARTITION BY minute, rows clustered
     by event_type within partitions for row-group min/max skipping."""
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    cached = _WAREHOUSE.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    tag = sf_tag(sf_abs)
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_warehouse", key[0], tag
+
+    def build() -> str:
+        path = session_scratch(
+            spark, f"warehouse_{sf_tag(os.path.abspath(sf_dir))}"
+        )
+        (
+            _day1_events(spark, sf_dir)
+            .withColumn("minute_key", F.date_format("ts", MINUTE_FMT))
+            .repartition("minute_key")
+            .sortWithinPartitions("event_type")
+            .write.mode("overwrite")
+            .partitionBy("minute_key")
+            .parquet(path)
+        )
+        return path
+
+    return session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "day1_minute_warehouse"),
+        build,
+        valid=os.path.isdir,
     )
-    (
-        _day1_events(spark, sf_dir)
-        .withColumn("minute_key", F.date_format("ts", MINUTE_FMT))
-        .repartition("minute_key")
-        .sortWithinPartitions("event_type")
-        .write.mode("overwrite")
-        .partitionBy("minute_key")
-        .parquet(path)
-    )
-    _WAREHOUSE[key] = path
-    return path
 
 
 @query(
@@ -170,6 +172,19 @@ def warehouse_minute_dpp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minute_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-1 per-type counts per event-time minute, as a stream."""
+    return (
+        _stream_events(spark, sf_dir)
+        .where(
+            (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
+            & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
+        )
+        .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+    )
+
+
 @query(
     "minute_counts_stream_replay",
     # Same SQL shape the stream goldens assert against: the batch
@@ -195,36 +210,17 @@ def minute_counts_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic replay form. State here is bounded by the day
     slice; the unbounded-production form adds ``withWatermark`` and
     append mode (``streaming/pipeline.py:68``, golden-tested)."""
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get(key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"minute_counts_stream_replay_{next(_REPLAY_IDS)}"
-        # footer-only batch read: the file stream needs an explicit
-        # schema, and deriving it from the file keeps the NTZ cast
-        # below correct on both fixture layouts
-        stream = _stream_events(spark, sf_dir)
-        agg = (
-            stream.where(
-                (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
-                & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
-            )
-            .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[key] = table
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "minute_counts_stream_replay"),
+        lambda: drain_to_memory(
+            spark,
+            "minute_counts_stream_replay",
+            _minute_counts_stream(spark, sf_dir),
+            "complete",
+        ),
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select(
@@ -257,34 +253,20 @@ def state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit certifies sink-vs-state consistency: a lost state partition
     or a misrouted key shows up as a hash mismatch here even if the
     sink looks plausible."""
-    sf_abs = os.path.abspath(sf_dir)
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_abs + "#stateaudit")
-    ckpt = _REPLAY.get(memo_key)
-    if ckpt is None or not os.path.isdir(ckpt):
-        table = f"state_store_audit_{next(_REPLAY_IDS)}"
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", app, table
-        )
-        stream = _stream_events(spark, sf_dir)
-        agg = (
-            stream.where(
-                (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
-                & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
-            )
-            .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[memo_key] = ckpt
+    ckpt = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "state_store_audit"),
+        lambda: session_scratch(
+            spark,
+            drain_to_memory(
+                spark,
+                "state_store_audit",
+                _minute_counts_stream(spark, sf_dir),
+                "complete",
+            ),
+        ),
+        valid=os.path.isdir,
+    )
     state = spark.read.format("statestore").load(ckpt)
     # the state key normalizes the grouping columns to (window,
     # event_type) regardless of plan-side aliases
@@ -353,11 +335,8 @@ def session_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     active user, evicted by the watermark in the production append
     form (``streaming/pipeline.py:sessionized_counts``); the bounded
     day-slice replay holds state for the slice only."""
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#session"))
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"session_window_stream_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         stream = _stream_events(spark, sf_dir)
         agg = (
             stream.where(
@@ -370,19 +349,16 @@ def session_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count("*").alias("n_events"))
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
+        return drain_to_memory(
+            spark, "session_window_stream_replay", agg, "complete"
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[(key[0], sf_abs + "#session")] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "session_window_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select(
@@ -422,29 +398,28 @@ def event_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` to bound its state, and the
     eviction that brings is a liveness tradeoff the bounded replay does
     not need."""
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#dedup"))
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"event_dedup_stream_replay_{next(_REPLAY_IDS)}"
-        stream = _stream_events(spark, sf_dir)
-        kept = stream.withColumn(
-            "bucket", F.floor(F.unix_timestamp("ts") / 600).cast("bigint")
-        ).dropDuplicates(["user_id", "event_type", "bucket"])
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
+
+    def build() -> str:
+        kept = (
+            _stream_events(spark, sf_dir)
+            .withColumn(
+                "bucket", F.floor(F.unix_timestamp("ts") / 600).cast("bigint")
+            )
+            .dropDuplicates(["user_id", "event_type", "bucket"])
         )
-        q = (
-            kept.select("event_type", "user_id", "bucket")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        return drain_to_memory(
+            spark,
+            "event_dedup_stream_replay",
+            kept.select("event_type", "user_id", "bucket"),
+            "append",
         )
-        q.awaitTermination()
-        _REPLAY[(key[0], sf_abs + "#dedup")] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "event_dedup_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     survivors = (
         spark.table(table)
         .groupBy("event_type")
@@ -513,12 +488,8 @@ def sliding_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows x types). Complete mode is the bounded-replay form — the
     unbounded-production form adds ``withWatermark`` + append mode so
     closed windows evict (``streaming/pipeline.py``, golden-tested)."""
-    sf_abs = os.path.abspath(sf_dir)
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_abs + "#sliding")
-    table = _REPLAY.get(memo_key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"sliding_window_stream_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         stream = _stream_events(spark, sf_dir)
         agg = (
             stream.where(
@@ -531,19 +502,16 @@ def sliding_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count("*").alias("n_events"))
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", app, table
+        return drain_to_memory(
+            spark, "sliding_window_stream_replay", agg, "complete"
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[memo_key] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "sliding_window_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select(
@@ -587,12 +555,8 @@ def enrich_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles for the join; state is only the O(segments x types)
     aggregation. A dim too big to broadcast would bucket both sides
     instead (``operators/bucketed.py`` pattern)."""
-    sf_abs = os.path.abspath(sf_dir)
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_abs + "#enrich")
-    table = _REPLAY.get(memo_key)
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"enrich_stream_static_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         dim = load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("mktsegment"),
@@ -612,19 +576,16 @@ def enrich_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("value_cents"),
             )
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", app, table
+        return drain_to_memory(
+            spark, "enrich_stream_static_replay", agg, "complete"
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[memo_key] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "enrich_stream_static_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select("mktsegment", "event_type", "n_events", "value_cents")
@@ -670,14 +631,10 @@ def upsert_sink_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     on directory-layout fixtures. Scale: each batch shuffles only
     itself plus the O(users) snapshot; the argmax-merge never rereads
     history."""
-    sf_abs = os.path.abspath(sf_dir)
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_abs + "#upsertsink")
-    base = _REPLAY.get(memo_key)
-    if base is None or not os.path.isdir(base):
-        tag = f"upsert_sink_{next(_REPLAY_IDS)}"
-        base = os.path.join(
-            tempfile.gettempdir(), "spark_graft_upsert_sink", app, tag
+
+    def build() -> str:
+        base = session_scratch(
+            spark, f"upsert_sink_{sf_tag(os.path.abspath(sf_dir))}"
         )
         os.makedirs(base, exist_ok=True)
         pointer = os.path.join(base, "_CURRENT")
@@ -709,22 +666,26 @@ def upsert_sink_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(vdir)
             os.replace(tmp, pointer)  # atomic re-point
 
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", app, tag
-        )
         stream = _stream_events(spark, sf_dir).where(
             (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
             & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
         )
         q = (
             stream.writeStream.foreachBatch(_emit)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", os.path.join(base, "_checkpoint"))
             .option("maxFilesPerTrigger", 1)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        _REPLAY[memo_key] = base
+        return base
+
+    base = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "upsert_sink_stream_replay"),
+        build,
+        valid=os.path.isdir,
+    )
     pointer = os.path.join(base, "_CURRENT")
     if not os.path.isfile(pointer):  # empty source -> no batch ran
         return spark.createDataFrame(
@@ -757,31 +718,33 @@ def _fragmented_warehouse(spark: SparkSession, sf_dir: str) -> str:
         compact_warehouse,
     )
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    cached = _WAREHOUSE.get((key[0], sf_abs + "#compact"))
-    if cached and os.path.isdir(cached):
-        return cached
-    tag = sf_tag(sf_abs)
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_compact", key[0], tag
+
+    def build() -> str:
+        path = session_scratch(
+            spark, f"compact_{sf_tag(os.path.abspath(sf_dir))}"
+        )
+        ev = load_table(spark, sf_dir, "events").where(
+            (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
+            & (F.col("ts") < F.lit(COMPACT_SLICE_END).cast("timestamp"))
+        )
+        (
+            ev.withColumn("minute_key", F.date_format("ts", MINUTE_FMT))
+            .repartition(COMPACT_WRITE_FILES)
+            .write.mode("overwrite")
+            .partitionBy("minute_key")
+            .parquet(path)
+        )
+        compact_warehouse(
+            spark, path, target_bytes=1 << 30, partition_col="minute_key"
+        )
+        return path
+
+    return session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "fragmented_warehouse"),
+        build,
+        valid=os.path.isdir,
     )
-    ev = load_table(spark, sf_dir, "events").where(
-        (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
-        & (F.col("ts") < F.lit(COMPACT_SLICE_END).cast("timestamp"))
-    )
-    (
-        ev.withColumn("minute_key", F.date_format("ts", MINUTE_FMT))
-        .repartition(COMPACT_WRITE_FILES)
-        .write.mode("overwrite")
-        .partitionBy("minute_key")
-        .parquet(path)
-    )
-    compact_warehouse(
-        spark, path, target_bytes=1 << 30, partition_col="minute_key"
-    )
-    _WAREHOUSE[(key[0], sf_abs + "#compact")] = path
-    return path
 
 
 @query(
@@ -875,11 +838,8 @@ def view_purchase_stream_join_replay(
         purchases_after_views,
     )
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#vpjoin"))
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"view_purchase_join_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         stream = _stream_events(spark, sf_dir)
         matched = purchases_after_views(
             stream.where(F.col("event_type") == "view"),
@@ -888,19 +848,16 @@ def view_purchase_stream_join_replay(
             watermark="60 days",  # fixture spans 30 days: never evict
             ts_col="ts",
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
+        return drain_to_memory(
+            spark, "view_purchase_join_replay", matched, "append"
         )
-        q = (
-            matched.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[(key[0], sf_abs + "#vpjoin")] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "view_purchase_stream_join_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return spark.table(table).agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum("gap_ms"), F.lit(0)).cast("bigint").alias(
@@ -932,38 +889,40 @@ def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import time
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs + "#outerfeed")
-    cached = _WAREHOUSE.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_outer_feed", key[0], sf_tag(sf_abs)
+
+    def build() -> str:
+        name = f"outer_feed_{sf_tag(os.path.abspath(sf_dir))}"
+        path = session_scratch(spark, name)
+        ev = load_table(spark, sf_dir, "events")
+        ev.coalesce(1).write.mode("overwrite").parquet(path)
+        now = time.time()
+        for f in globmod.glob(os.path.join(path, "part-*.parquet")):
+            os.utime(f, (now - 100, now - 100))
+        for i, ts in enumerate(OUTER_SENTINEL_TS):
+            sentinel = spark.createDataFrame(
+                [
+                    (-(2 * i + 1), ts, -1, "view", None, None),
+                    (-(2 * i + 2), ts, -2, "purchase", None, None),
+                ],
+                "event_id long, ts string, user_id long, event_type string,"
+                " value double, props string",
+            ).withColumn("ts", F.col("ts").cast("timestamp"))
+            staging = session_scratch(spark, f"{name}_sentinel_{i}")
+            sentinel.coalesce(1).write.mode("overwrite").parquet(staging)
+            [src] = globmod.glob(os.path.join(staging, "part-*.parquet"))
+            dst = os.path.join(path, f"zz-sentinel-{i}.parquet")
+            shutil.copy(src, dst)
+            shutil.rmtree(staging, ignore_errors=True)
+            mtime = now - 50 + 40 * i
+            os.utime(dst, (mtime, mtime))
+        return path
+
+    return session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "outer_join_feed"),
+        build,
+        valid=os.path.isdir,
     )
-    ev = load_table(spark, sf_dir, "events")
-    ev.coalesce(1).write.mode("overwrite").parquet(path)
-    now = time.time()
-    for f in globmod.glob(os.path.join(path, "part-*.parquet")):
-        os.utime(f, (now - 100, now - 100))
-    for i, ts in enumerate(OUTER_SENTINEL_TS):
-        sentinel = spark.createDataFrame(
-            [
-                (-(2 * i + 1), ts, -1, "view", None, None),
-                (-(2 * i + 2), ts, -2, "purchase", None, None),
-            ],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        staging = tempfile.mkdtemp(prefix="outer_sentinel_")
-        sentinel.coalesce(1).write.mode("overwrite").parquet(staging)
-        [src] = globmod.glob(os.path.join(staging, "part-*.parquet"))
-        dst = os.path.join(path, f"zz-sentinel-{i}.parquet")
-        shutil.copy(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        mtime = now - 50 + 40 * i
-        os.utime(dst, (mtime, mtime))
-    _WAREHOUSE[key] = path
-    return path
 
 
 @query(
@@ -1028,12 +987,9 @@ def abandoned_views_stream_replay(
         views_without_purchase,
     )
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#abandoned"))
-    if table is None or not spark.catalog.tableExists(table):
+
+    def build() -> str:
         feed = _outer_join_feed(spark, sf_dir)
-        table = f"abandoned_views_replay_{next(_REPLAY_IDS)}"
         schema = spark.read.parquet(feed).schema
         stream = (
             spark.readStream.schema(schema)
@@ -1047,9 +1003,6 @@ def abandoned_views_stream_replay(
             watermark="1 minute",
             ts_col="ts",
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
-        )
         # Stream-stream joins instantiate FOUR state stores per shuffle
         # partition per micro-batch; a plain session's 200 partitions
         # turn this replay's three micro-batches into thousands of
@@ -1061,18 +1014,18 @@ def abandoned_views_stream_replay(
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(table)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            return drain_to_memory(
+                spark, "abandoned_views_replay", out, "append"
             )
-            q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _REPLAY[(key[0], sf_abs + "#abandoned")] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "abandoned_views_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     sink = spark.table(table).where(F.col("user_id") >= 0)
     return (
         sink.agg(
@@ -1122,11 +1075,8 @@ def error_streak_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         error_streak_alerts,
     )
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#streaks"))
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"error_streak_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         stream = _stream_events(spark, sf_dir).withColumn(
             "user_id", F.col("user_id").cast("string")
         )
@@ -1137,19 +1087,14 @@ def error_streak_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="60 days",  # bounded replay: never close groups early
             tiebreak_col="event_id",
         )
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
-        )
-        q = (
-            alerts.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[(key[0], sf_abs + "#streaks")] = table
+        return drain_to_memory(spark, "error_streak_replay", alerts, "append")
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "error_streak_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select(
@@ -1183,28 +1128,22 @@ def first_seen_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_seen_users,
     )
 
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    table = _REPLAY.get((key[0], sf_abs + "#firstseen"))
-    if table is None or not spark.catalog.tableExists(table):
-        table = f"first_seen_replay_{next(_REPLAY_IDS)}"
+
+    def build() -> str:
         stream = _stream_events(spark, sf_dir).withColumn(
             "user_id", F.col("user_id").cast("string")
         )
         announced = first_seen_users(stream, ts_col="ts", watermark="60 days")
-        ckpt = os.path.join(
-            tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
+        return drain_to_memory(
+            spark, "first_seen_replay", announced, "append"
         )
-        q = (
-            announced.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _REPLAY[(key[0], sf_abs + "#firstseen")] = table
+
+    table = session_memo(
+        spark,
+        frame_memo_tag(sf_dir, "first_seen_stream_replay"),
+        build,
+        valid=spark.catalog.tableExists,
+    )
     return (
         spark.table(table)
         .select(

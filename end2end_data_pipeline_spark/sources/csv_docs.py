@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from end2end_data_pipeline_spark.sources.jsonl import CORRUPT_COL
+from end2end_data_pipeline_spark.sources.tables import session_cached
 
 
 def _reader_options(reader):
@@ -37,13 +38,6 @@ def _reader_options(reader):
         .option("quote", '"')
         .option("escape", '"')
     )
-
-
-# (applicationId, path, schema json) -> the cached PERMISSIVE read,
-# so repeated invocations (sweeps, bench repeats) reuse ONE
-# InMemoryRelation instead of accumulating fresh ones per call (the
-# ge2/q15 memo pattern, r9 code review)
-_RAW_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def read_csv_docs(
@@ -59,15 +53,15 @@ def read_csv_docs(
     full = T.StructType(
         [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
     )
-    memo_key = (spark.sparkContext.applicationId, path, full.json())
-    raw = _RAW_MEMO.get(memo_key)
-    if raw is None:
-        raw = (
-            # same SPARK-21610 cache as the JSONL reader: the corrupt
-            # column cannot be queried alone straight off the scan
-            _reader_options(spark.read.schema(full)).csv(path).cache()
-        )
-        _RAW_MEMO[memo_key] = raw
+    # same SPARK-21610 cache as the JSONL reader: the corrupt column
+    # cannot be queried alone straight off the scan; one cache per
+    # (path, schema), so repeated invocations reuse ONE
+    # InMemoryRelation
+    raw = session_cached(
+        spark,
+        f"csv_raw:{path}:{full.json()}",
+        lambda: _reader_options(spark.read.schema(full)).csv(path),
+    )
     good = raw.where(F.col(CORRUPT_COL).isNull()).select(
         *[f.name for f in schema.fields]
     )

@@ -20,12 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CORRUPT_COL = "_corrupt_record"
+from end2end_data_pipeline_spark.sources.tables import session_cached
 
-# (applicationId, path, schema json) -> the cached PERMISSIVE read —
-# one InMemoryRelation per distinct input, not per call (the ge2/q15
-# memo pattern, r9 code review; the CSV reader shares the discipline)
-_RAW_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+CORRUPT_COL = "_corrupt_record"
 
 
 def read_jsonl_docs(
@@ -43,21 +40,18 @@ def read_jsonl_docs(
     full = T.StructType(
         [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
     )
-    memo_key = (spark.sparkContext.applicationId, path, full.json())
-    raw = _RAW_MEMO.get(memo_key)
-    if raw is None:
-        raw = (
-            spark.read.schema(full)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .json(path)
-            # Spark requires materializing the corrupt column before
-            # filtering on it (SPARK-21610): referencing it straight
-            # off the scan is disallowed, so land the batch through a
-            # cache
-            .cache()
-        )
-        _RAW_MEMO[memo_key] = raw
+    # Spark requires materializing the corrupt column before
+    # filtering on it (SPARK-21610): referencing it straight off the
+    # scan is disallowed, so land the batch through a cache — one per
+    # (path, schema), not per call
+    raw = session_cached(
+        spark,
+        f"jsonl_raw:{path}:{full.json()}",
+        lambda: spark.read.schema(full)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .json(path),
+    )
     good = raw.where(F.col(CORRUPT_COL).isNull()).select(
         *[f.name for f in schema.fields]
     )

@@ -5,9 +5,27 @@ one ``spark.read.parquet``) generalized to the ten-table testdata star
 schema. Reads stay fully declarative so Catalyst pushes filters and
 prunes columns into the parquet scan (verify via
 ``df.explain('formatted')`` → PushedFilters / ReadSchema).
+
+This module also holds the engine's one session-state registry. Every
+per-application thing an operator keeps — cached and checkpointed
+frames, drained memory-sink tables, written layouts and fixtures,
+fitted model state, a registered data source — is an entry of
+``session_memo``. A key names its owner: ``session_cached`` and
+``session_checkpointed`` key on ``("cached", tag)`` and
+``("checkpointed", tag)``, a frame derived from a fixture dir takes its
+tag from ``frame_memo_tag`` (name + abspath, so relative and absolute
+callers share one entry), and model state keys on ``model_memo_key``
+(abspath, mtime, size). An entry is stored only after its build
+returns: a build that raises leaves nothing, and the next call builds
+again. Entries belong to one Spark application; the first call under a
+new ``applicationId`` drops them all (PySpark runs one SparkContext
+per process). Files an entry needs live under ``session_scratch``: one
+directory per application, removed when the interpreter exits.
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,25 +50,52 @@ TABLE_NAMES = (
 BROADCAST_DIMS = ("region", "nation", "supplier")
 
 
-# (applicationId, tag) -> a session-cached DataFrame. Operators whose
-# hot intermediate is corpus-scale (minhash/simhash signatures,
-# shingle sets) route their .cache() through this memo so repeated
-# invocations — full-registry sweeps, bench repeat=N — reuse ONE
-# InMemoryRelation per session+input instead of accumulating a fresh
-# one per call (the ge2/q15 memo pattern generalized; r9 review).
-_FRAME_MEMO: dict[tuple[str, str], DataFrame] = {}
+class _AppState:
+    """What the registry holds for one Spark application: its
+    entries, its scratch root (made on first use) and the sequence
+    that numbers its memory-sink tables."""
+
+    def __init__(self, app_id: str):
+        self.app_id = app_id
+        self.entries: dict = {}
+        self.scratch: str | None = None
+        self.ids = itertools.count()
 
 
-def session_cached(spark: SparkSession, tag: str, frame: DataFrame) -> DataFrame:
-    """Memoized ``frame.cache()`` keyed on (applicationId, tag) —
-    build the (lazy) frame unconditionally, cache it once per session."""
-    key = (spark.sparkContext.applicationId, tag)
-    hit = _FRAME_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = frame.cache()
-    _FRAME_MEMO[key] = out
-    return out
+_SESSION = _AppState("")
+
+
+def _app_state(spark: SparkSession) -> _AppState:
+    """The registry state of ``spark``'s application; a different
+    applicationId than the last one seen drops every entry."""
+    global _SESSION
+    app_id = spark.sparkContext.applicationId
+    if _SESSION.app_id != app_id:
+        _SESSION = _AppState(app_id)
+    return _SESSION
+
+
+def session_memo(spark: SparkSession, key, build, valid=None):
+    """The per-application entry under ``key``, built by the
+    zero-argument ``build`` on a miss. The entry is stored only after
+    ``build()`` returns, so a build that raises leaves nothing behind
+    and the next call builds again. ``valid(entry)`` (optional)
+    re-checks a hit whose backing object can vanish (a scratch path,
+    a catalog table); a hit that fails it is rebuilt."""
+    entries = _app_state(spark).entries
+    if key in entries and (valid is None or valid(entries[key])):
+        return entries[key]
+    value = build()
+    entries[key] = value
+    return value
+
+
+def session_cached(spark: SparkSession, tag: str, build) -> DataFrame:
+    """``build().cache()`` once per application and tag: repeated
+    invocations (full-registry sweeps, bench repeats) reuse ONE
+    InMemoryRelation instead of accumulating a fresh one per call,
+    and a hit never calls ``build``."""
+    return session_memo(spark, ("cached", tag), lambda: build().cache())
 
 
 def disk_checkpoint(df: DataFrame) -> DataFrame:
@@ -82,43 +127,16 @@ def disk_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
-# (applicationId, tag) -> an eagerly disk-checkpointed DataFrame; the
-# checkpoint IS the materialization, so no .cache() on top (blocks
-# would be stored twice). Same lifecycle as _FRAME_MEMO.
-_CKPT_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def session_checkpointed(spark: SparkSession, tag: str, frame: DataFrame) -> DataFrame:
-    """Memoized ``disk_checkpoint`` keyed on (applicationId, tag) —
+def session_checkpointed(spark: SparkSession, tag: str, build) -> DataFrame:
+    """``disk_checkpoint(build())`` once per application and tag —
     the lineage-TRUNCATING sibling of ``session_cached``, for
     intermediates whose consumers would otherwise re-analyze the
     whole upstream tree every invocation (iterative graph rounds,
-    deep shared builders). Eager: fn() runs Spark jobs at
-    construction time on the first call per session."""
-    key = (spark.sparkContext.applicationId, tag)
-    hit = _CKPT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = disk_checkpoint(frame)
-    _CKPT_MEMO[key] = out
-    return out
-
-
-def session_memoized(spark: SparkSession, tag: str, build) -> DataFrame:
-    """Memoize an ALREADY-MATERIALIZED frame produced by ``build()``
-    (a zero-arg callable) — for driver-coordinated LOOP outputs
-    (iterative label propagation, fixpoint rounds) whose construction
-    runs eager jobs and driver-side convergence counts before any
-    frame exists. ``session_checkpointed`` cannot short-circuit those
-    (the loop executes before it is called), so repeat invocations
-    would re-run every round; this runs the loop once per
-    (applicationId, tag) and hands every later caller the final
-    materialized frame. Same memo/lifecycle as the checkpoint memo."""
-    key = (spark.sparkContext.applicationId, tag)
-    hit = _CKPT_MEMO.get(key)
-    if hit is None:
-        hit = _CKPT_MEMO[key] = build()
-    return hit
+    deep shared builders). Eager: runs Spark jobs on the first call
+    per application."""
+    return session_memo(
+        spark, ("checkpointed", tag), lambda: disk_checkpoint(build())
+    )
 
 
 def input_scaled_partitions(
@@ -153,8 +171,8 @@ def input_scaled_partitions(
 
 
 def frame_memo_tag(sf_dir: str, name: str) -> str:
-    """Canonical ``session_cached``/``session_checkpointed`` tag for a
-    frame derived from one fixture dir: name + abspath, so relative
+    """Canonical registry tag for a frame, table or directory derived
+    from one fixture dir: name + abspath, so relative
     and absolute callers share ONE memo entry (r13 advice: the
     ppjoin_prefix tag keyed the raw sf_dir string while
     _copurchase_op keyed abspath — mixed callers double-materialize).
@@ -192,24 +210,53 @@ def run_scratch_dir(prefix: str) -> str:
     return d
 
 
-def model_memo_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
-    """Memo key for per-application MODEL STATE trained off one
-    fixture table (k-means centroids, BPE merge lists, drained replay
-    state): (applicationId, abspath(sf_dir), mtime_ns, size). One
-    builder so every model cache keys identically — abspath so mixed
-    relative/absolute callers share one entry, and (mtime, size) so a
-    fixture regenerated at the same path within one application is
-    never served stale state (r11 advice: the three memos had drifted
-    between verbatim and abspath keys)."""
+def session_scratch(spark: SparkSession, name: str) -> str:
+    """``<root>/<name>``, where ``<root>`` is one ``run_scratch_dir``
+    per application, so every stream checkpoint, written layout and
+    fixture of the application is removed at interpreter exit. The
+    path itself is not created: Spark's writers and stream
+    checkpoints make it."""
+    import os
+
+    st = _app_state(spark)
+    if st.scratch is None:
+        st.scratch = run_scratch_dir("spark_graft_session_")
+    return os.path.join(st.scratch, name)
+
+
+def drain_to_memory(
+    spark: SparkSession, name: str, stream_df: DataFrame, output_mode: str
+) -> str:
+    """Run ``stream_df`` once over everything available (the
+    ``availableNow`` trigger) into a memory sink and return the sink's
+    table name: ``name`` plus a per-application sequence number, so a
+    rebuilt entry never resumes an earlier checkpoint. The checkpoint
+    lives in ``session_scratch`` under the table name."""
+    table = f"{name}_{next(_app_state(spark).ids)}"
+    (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(table)
+        .option("checkpointLocation", session_scratch(spark, table))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return table
+
+
+def model_memo_key(sf_dir: str, table: str) -> tuple:
+    """Key part for MODEL STATE trained off one fixture table (k-means
+    centroids, BPE merge lists, drained replay state): (abspath(sf_dir),
+    mtime_ns, size). One builder so every model entry keys identically
+    — abspath so mixed relative/absolute callers share one entry, and
+    (mtime, size) so a fixture regenerated at the same path within one
+    application is never served stale state (r11 advice: the three
+    memos had drifted between verbatim and abspath keys)."""
     import os
 
     st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-    )
+    return (os.path.abspath(sf_dir), st.st_mtime_ns, st.st_size)
 
 
 def sf_tag(sf_abs: str) -> str:

@@ -370,7 +370,7 @@ def test_sketch_stream_replay_equals_batch(spark):
     """The replay's whole claim: arrival-time sketch maintenance over
     an arbitrary 3-way split merges to EXACTLY the batch sketch's
     estimates — and the drain really ran multiple micro-batches."""
-    from end2end_data_pipeline_spark.operators import dedup
+    from end2end_data_pipeline_spark.sources import tables
 
     stream_rows = sorted(
         tuple(r)
@@ -387,9 +387,14 @@ def test_sketch_stream_replay_equals_batch(spark):
     assert stream_rows == batch_rows
     # 3 split files with maxFilesPerTrigger=1 -> final state is batch 2
     state_paths = [
-        p for k, p in dedup._KMV_REPLAY.items() if k[1].endswith("sf0.001")
+        p
+        for k, p in tables._app_state(spark).entries.items()
+        if k[0] == "source_sketch_stream_replay" and k[1].endswith("sf0.001")
     ]
     assert state_paths and all(p.endswith("state_2") for p in state_paths)
+    # the drained state lives under the application's scratch root
+    root = tables.session_scratch(spark, "")
+    assert all(p.startswith(root) for p in state_paths)
 
 
 def test_tpch_partsupp_invariants(spark):

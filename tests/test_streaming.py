@@ -480,24 +480,22 @@ def test_stream_replay_query_uses_streaming_engine(spark):
     produced by a completed StreamingQuery (checkpoint on disk), and
     repeat calls reuse that sink instead of re-running the stream."""
     import os
-    import tempfile
 
     from end2end_data_pipeline_spark.operators import warehouse_ops
+    from end2end_data_pipeline_spark.sources import tables
 
     sf = "/root/testdata/sf0.001"
     df1 = warehouse_ops.minute_counts_stream_replay(spark, sf)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf))
-    table = warehouse_ops._REPLAY.get(key)
+    key = tables.frame_memo_tag(sf, "minute_counts_stream_replay")
+    table = tables._app_state(spark).entries.get(key)
     assert table and spark.catalog.tableExists(table)
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "spark_graft_replay_ckpt", key[0], table
-    )
+    ckpt = tables.session_scratch(spark, table)
     # a streaming checkpoint (offsets/commits) proves engine execution
     assert os.path.isdir(os.path.join(ckpt, "offsets"))
     assert os.listdir(os.path.join(ckpt, "commits"))
     # memoized: second call returns the same sink without a new table
     df2 = warehouse_ops.minute_counts_stream_replay(spark, sf)
-    assert warehouse_ops._REPLAY[key] == table
+    assert tables._app_state(spark).entries[key] == table
     assert df1.collect() == df2.collect()
 
 
