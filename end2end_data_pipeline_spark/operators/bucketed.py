@@ -2,12 +2,13 @@
 "what we'd add first on a real cluster", driver-checkable edition).
 
 ``sources/bucketing.py`` can write orders/lineitem co-bucketed on the
-order key; this module REGISTERS a query that runs the TPC-H Q3 shape
-over those bucketed tables, so the shuffle-elimination claim is proven
-three ways:
+order key; this module REGISTERS twins of the orders-lineitem TPC-H
+queries (Q3, Q4, Q8, Q12, Q18) that run the plain query's own body
+(``tpch_like._q3_shipping_priority`` and siblings) over those bucketed
+tables, so the shuffle-elimination claim is proven three ways:
 
-- correctness: same DuckDB oracle as ``q3_shipping_priority`` — the
-  bucketed layout must not change a single value;
+- correctness: same DuckDB oracle as the plain twin — the bucketed
+  layout must not change a single value;
 - plan: ``tests/test_bucketing.py`` asserts the executed plan joins
   the two facts with ZERO Exchange on the join keys (broadcast
   disabled, so it is the bucket co-location doing the work, not a
@@ -31,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end2end_data_pipeline_spark.operators import tpch_like  # noqa: F401
+from end2end_data_pipeline_spark.operators import tpch_like
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.bucketing import (
     cobucket_orders_lineitem,
@@ -48,21 +49,23 @@ from end2end_data_pipeline_spark.sources.tables import (
 
 def bucketed_orders_lineitem(
     spark: SparkSession, sf_dir: str
-) -> tuple[str, str]:
-    """Catalog names of the co-bucketed orders/lineitem copies for
-    ``sf_dir``, materializing them on first use in this session."""
+) -> tuple[DataFrame, DataFrame]:
+    """The co-bucketed orders/lineitem copies for ``sf_dir`` as
+    catalog-table frames, materializing them on first use in this
+    session."""
 
     def build() -> tuple[str, str]:
         prefix = f"bkt_{sf_tag(os.path.abspath(sf_dir))}"
         out = session_scratch(spark, prefix)
         return cobucket_orders_lineitem(spark, sf_dir, out, prefix=prefix)
 
-    return session_memo(
+    o_name, l_name = session_memo(
         spark,
         frame_memo_tag(sf_dir, "bucketed_orders_lineitem"),
         build,
         valid=lambda names: all(spark.catalog.tableExists(t) for t in names),
     )
+    return spark.table(o_name), spark.table(l_name)
 
 
 @query(
@@ -82,31 +85,8 @@ def q3_shipping_priority_bucketed(
     scan and top-N). ``tests/test_bucketing.py::
     test_bucketed_q3_twin_runs_without_join_exchange`` asserts that
     plan shape mechanically."""
-    o_name, l_name = bucketed_orders_lineitem(spark, sf_dir)
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = spark.table(o_name).where(F.col("o_orderdate") < "1997-01-01")
-    li = spark.table(l_name).where(F.col("l_shipdate") > "1997-01-01")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
-    building_orders = o.join(
-        F.broadcast(c), F.col("o_custkey") == F.col("c_custkey")
-    )
-    return (
-        li.join(building_orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .agg(F.sum(cents).alias("revenue_cents"))
-        .select("o_orderkey", "revenue_cents", "orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue_cents").desc(), "o_orderkey")
-        .limit(20)
+    return tpch_like._q3_shipping_priority(
+        spark, sf_dir, *bucketed_orders_lineitem(spark, sf_dir)
     )
 
 
@@ -125,25 +105,8 @@ def q12_shipmode_priority_bucketed(
     shuffles, correctly — its key is not the bucket key; that
     shuffle moves O(groups) partial aggregates, not facts).
     ``tests/test_bucketing.py`` asserts the join-side plan shape."""
-    o_name, l_name = bucketed_orders_lineitem(spark, sf_dir)
-    o = spark.table(o_name).select("o_orderkey", "o_orderpriority")
-    li = spark.table(l_name).where(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-            F.sum(cents).alias("revenue_cents"),
-        )
-        .orderBy("l_returnflag")
+    return tpch_like._q12_shipmode_priority(
+        spark, sf_dir, *bucketed_orders_lineitem(spark, sf_dir)
     )
 
 
@@ -160,22 +123,8 @@ def q4_order_priority_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-merge. At 100 TB the EXISTS probe is the expensive side of
     Q4; bucketing removes both exchanges from it.
     ``tests/test_bucketing.py`` asserts the plan shape."""
-    o_name, l_name = bucketed_orders_lineitem(spark, sf_dir)
-    o = spark.table(o_name).where(
-        (F.col("o_orderdate") >= "1996-07-01")
-        & (F.col("o_orderdate") < "1996-10-01")
-    )
-    li = spark.table(l_name).select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            li,
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate") > F.col("o_orderdate")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
+    return tpch_like._q4_order_priority(
+        spark, sf_dir, *bucketed_orders_lineitem(spark, sf_dir)
     )
 
 
@@ -192,30 +141,11 @@ def q18_large_orders_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders⋈big join then reuses the same partitioning. Between the two
     fact scans and the final top-N there is no orderkey exchange
     anywhere — at 100 TB the whole large-order detection runs at scan
-    locality. Only the customer key join remains (broadcast-eligible
-    dim at any realistic scale)."""
-    o_name, l_name = bucketed_orders_lineitem(spark, sf_dir)
-    big = (
-        spark.table(l_name)
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .where(F.col("qty") > 210)
-        .select("l_orderkey")
-    )
-    o = spark.table(o_name)
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    return (
-        o.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias(
-                "totalprice_cents"
-            ),
-        )
-        .orderBy(F.col("totalprice_cents").desc(), "o_orderkey")
-        .limit(50)
+    locality. Only the customer key join remains; like the plain twin
+    it carries no hint, so Spark broadcasts customer when it fits the
+    broadcast threshold and otherwise shuffles on the customer key."""
+    return tpch_like._q18_large_orders(
+        spark, sf_dir, *bucketed_orders_lineitem(spark, sf_dir)
     )
 
 
@@ -263,48 +193,8 @@ def q8_market_share_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin; bucketing removes the last shuffle of fact rows (the final
     per-year rollup moves O(years) partials).
     ``tests/test_bucketing.py`` asserts the plan shape."""
-    o_name, l_name = bucketed_orders_lineitem(spark, sf_dir)
-    p = load_table(spark, sf_dir, "part").where(
-        F.col("p_type") == "ECONOMY"
-    ).select("p_partkey")
-    li = spark.table(l_name).select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    ).join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    america_nations = n.join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    ).select(F.col("n_nationkey").alias("am_nk"))
-    c = load_table(spark, sf_dir, "customer").join(
-        F.broadcast(america_nations), F.col("c_nationkey") == F.col("am_nk")
-    ).select("c_custkey")
-    o = spark.table(o_name).where(
-        (F.col("o_orderdate") >= "1995-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    ).join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey")).select(
-        "o_orderkey", "o_orderdate"
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    supp_nation = s.join(
-        F.broadcast(n.select("n_nationkey", F.col("n_name").alias("supp_nation"))),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    ).select("s_suppkey", "supp_nation")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
-    nation_cents = F.sum(
-        F.when(F.col("supp_nation") == "NATION_3", cents).otherwise(F.lit(0))
-    )
-    return (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg(
-            nation_cents.alias("nation_cents"),
-            F.sum(cents).alias("total_cents"),
-            (nation_cents / F.sum(cents).cast("double")).alias("mkt_share"),
-        )
-        .orderBy("o_year")
+    return tpch_like._q8_market_share(
+        spark, sf_dir, *bucketed_orders_lineitem(spark, sf_dir)
     )
 
 

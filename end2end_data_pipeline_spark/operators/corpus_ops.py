@@ -29,8 +29,7 @@ from end2end_data_pipeline_spark.sources.tables import (
     model_memo_key,
     session_cached,
     session_memo,
-    session_scratch,
-    sf_tag,
+    stream_table,
 )
 
 # --- sequence packing ------------------------------------------------
@@ -1150,13 +1149,9 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators' outputs; the rollup runs on the drained sink. At 100
     TB the index frames are the persisted curation index, not a
     recomputation."""
-    import os as _os
-
     from end2end_data_pipeline_spark.operators.text_analysis import (
         _quality_exprs,
     )
-
-    docs_path = _os.path.join(sf_dir, "documents.parquet")
 
     def build() -> str:
         # corpus index frames — the STATIC side of the stream-static
@@ -1174,23 +1169,8 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dsel = _dsir_perdoc(spark, sf_dir).select("doc_id", "selected")
 
-        # the file-stream source requires a DIRECTORY; the standard
-        # fixture ships documents.parquet as a single file, so expose
-        # it through a symlink dir (stress fixtures write directories
-        # and stream as-is)
-        if _os.path.isdir(docs_path):
-            stream_dir = docs_path
-        else:
-            sf_abs = _os.path.abspath(sf_dir)
-            stream_dir = session_scratch(spark, f"curation_src_{sf_tag(sf_abs)}")
-            link = _os.path.join(stream_dir, "documents.parquet")
-            _os.makedirs(stream_dir, exist_ok=True)
-            if not _os.path.lexists(link):
-                _os.symlink(_os.path.abspath(docs_path), link)
-        schema = spark.read.parquet(docs_path).schema
         flagged_stream = (
-            spark.readStream.schema(schema)
-            .parquet(stream_dir)
+            stream_table(spark, sf_dir, "documents")
             .select(
                 "doc_id",
                 "source",

@@ -171,8 +171,16 @@ def signatures_for(docs: DataFrame) -> DataFrame:
     return base.select("doc_id", "shh", *cols)
 
 
-def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return signatures_for(fan_out(spark, load_table(spark, sf_dir, "documents")))
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` signature frame, cached once per (application,
+    sf_dir) and shared by every MinHash query of this module."""
+    return session_cached(
+        spark,
+        frame_memo_tag(sf_dir, "minhash_sigs"),
+        lambda: signatures_for(
+            fan_out(spark, load_table(spark, sf_dir, "documents"))
+        ),
+    )
 
 
 def sig_ctes(dialect: str, src: str = "documents", prefix: str = "") -> str:
@@ -217,11 +225,7 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dedup_band_stats recomputed the signature pass per execution
     while the pair queries cached the identical frame; the cache is
     columnar, so selecting the mh columns never deserializes shh)."""
-    sigs = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "minhash_sigs"),
-        lambda: _signatures(spark, sf_dir),
-    )
+    sigs = _minhash_sigs(spark, sf_dir)
     return sigs.select("doc_id", *[f"mh{j}" for j in range(N_MINHASH)]).orderBy(
         "doc_id"
     )
@@ -251,8 +255,13 @@ def bands_for(sigs: DataFrame) -> DataFrame:
 # contributes f^2/2 candidate pairs, so one degenerate bucket (e.g.
 # empty-ish documents all hashing alike) can go quadratic on a skewed
 # real corpus. Buckets larger than the cap are dropped from candidate
-# generation on BOTH engines; at 100 TB pair this with multi-probe /
-# more bands to recover the recall the dropped bucket carried.
+# generation, on both engines, by dedup_minhash_pairs (and the
+# queries that read its pairs) and by the incremental dedup
+# (operators/incremental.py). The cluster queries dedup_clusters and
+# dedup_cluster_survivors (``_lsh_edges`` / ``_duck_cluster_sql``)
+# generate candidates from every bucket, uncapped. At 100 TB pair the
+# cap with multi-probe / more bands to recover the recall the dropped
+# bucket carried.
 LSH_BUCKET_CAP = 200
 
 
@@ -299,19 +308,31 @@ def dedup_minhash_pairs(
     larger than ``bucket_cap`` are dropped before the self-join (the
     hot-bucket guard; the oversize-bucket list is tiny so the filter
     is a broadcast anti-join)."""
-    sigs = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "minhash_sigs"),
-        lambda: _signatures(spark, sf_dir),
-    )
-    bands = bands_for(sigs)
+    sigs = _minhash_sigs(spark, sf_dir)
+    bands = cap_buckets(bands_for(sigs), bucket_cap)
+    return _lsh_verified_pairs(sigs, bands).orderBy("doc_a", "doc_b")
+
+
+def cap_buckets(bands: DataFrame, bucket_cap: int) -> DataFrame:
+    """``bands`` without the rows of any (band_id, band_key) bucket
+    holding more than ``bucket_cap`` docs. The oversize-bucket list is
+    tiny, so the filter is a broadcast anti-join. Shared with
+    operators/incremental.py."""
     oversize = (
         bands.groupBy("band_id", "band_key")
         .count()
         .where(F.col("count") > bucket_cap)
         .select("band_id", "band_key")
     )
-    bands = bands.join(F.broadcast(oversize), ["band_id", "band_key"], "left_anti")
+    return bands.join(F.broadcast(oversize), ["band_id", "band_key"], "left_anti")
+
+
+def _lsh_verified_pairs(sigs: DataFrame, bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_union, jaccard) for every doc pair
+    that shares a bucket of ``bands`` and whose shingle sets in
+    ``sigs`` reach JACCARD_THRESHOLD. The band frame decides the cap:
+    pass ``cap_buckets(...)`` for the capped pair query, plain
+    ``bands_for(sigs)`` for the uncapped cluster graph."""
     x = bands.alias("x")
     y = bands.alias("y")
     cand = (
@@ -339,7 +360,6 @@ def dedup_minhash_pairs(
         .withColumn("jaccard", F.col("n_common") / F.col("n_union").cast("double"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -371,6 +391,16 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(SIMHASH_BITS)
     )
     return votes.select("doc_id", F.expr(sig).cast("bigint").alias("simhash"))
+
+
+def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_simhash_signatures``, cached once per (application, sf_dir)
+    and shared by the SimHash queries."""
+    return session_cached(
+        spark,
+        frame_memo_tag(sf_dir, "simhash_sigs"),
+        lambda: _simhash_signatures(spark, sf_dir),
+    )
 
 
 def _simhash_duck_cte() -> str:
@@ -408,11 +438,7 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     session cache ``dedup_simhash_pairs`` uses (r14: the signature
     query recomputed the 64-vote aggregation per execution while its
     sibling cached the identical frame)."""
-    return session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "simhash_sigs"),
-        lambda: _simhash_signatures(spark, sf_dir),
-    ).orderBy("doc_id")
+    return _simhash_sigs(spark, sf_dir).orderBy("doc_id")
 
 
 @query(
@@ -440,11 +466,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair within hamming 3 must share at least one of 4 byte-chunks),
     then exact hamming filter. 16-bit chunks: hamming <= 3 over 64
     bits guarantees one equal chunk."""
-    sigs = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "simhash_sigs"),
-        lambda: _simhash_signatures(spark, sf_dir),
-    )
+    sigs = _simhash_sigs(spark, sf_dir)
     chunks = sigs.select(
         "doc_id",
         "simhash",
@@ -480,6 +502,19 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
+    )
+
+
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh): each document's distinct hashed-shingle set,
+    cached once per (application, sf_dir) and shared by the exact
+    Jaccard, containment and prefix-filter queries."""
+    return session_cached(
+        spark,
+        frame_memo_tag(sf_dir, "shingle_sets"),
+        lambda: fan_out(spark, load_table(spark, sf_dir, "documents")).select(
+            "doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")
+        ),
     )
 
 
@@ -533,12 +568,7 @@ def dedup_ngram_jaccard_pairs(
     at df_cap^2/2 pairs — the guard that keeps a skewed corpus from
     going quadratic at 100 TB. The hot-shingle list is tiny by
     construction, so the filter is a broadcast anti-join."""
-    docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
-    sh = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "shingle_sets"),
-        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
-    )
+    sh = _shingle_sets(spark, sf_dir)
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     hot = (
         inv.groupBy("shingle")
@@ -572,49 +602,12 @@ def dedup_ngram_jaccard_pairs(
 
 
 def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified near-dup pairs as an undirected edge list (the
-    dedup_minhash_pairs candidate+verify pipeline, minus output
-    shaping)."""
-    sigs = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "minhash_sigs"),
-        lambda: _signatures(spark, sf_dir),
-    )
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.expr(_band_key(b, th.SPARK)).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    x = bands.alias("x")
-    y = bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shh").alias("sh_a"))
-    b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shh").alias("sh_b"))
-    common, union = _jaccard_parts("sh_a", "sh_b", th.SPARK)
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(F.expr(common) / F.expr(union).cast("double") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
+    """Verified near-dup pairs as an undirected edge list: the
+    dedup_minhash_pairs candidate+verify pipeline over ALL buckets
+    (no ``LSH_BUCKET_CAP``; its oracle ``_duck_cluster_sql`` has none
+    either), minus output shaping."""
+    sigs = _minhash_sigs(spark, sf_dir)
+    return _lsh_verified_pairs(sigs, bands_for(sigs)).select("doc_a", "doc_b")
 
 
 MAX_CC_ITERATIONS = 20
@@ -855,12 +848,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles leave the index, never the verification sets), candidates
     verified only on joined shingle sets. Same quadratic guard, same
     broadcast anti-join."""
-    docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
-    sh = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "shingle_sets"),
-        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
-    )
+    sh = _shingle_sets(spark, sf_dir)
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     hot = (
         inv.groupBy("shingle")
@@ -947,25 +935,7 @@ def dedup_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts; the bucket table reduces to N_BANDS rows. Reads
     the shared ``minhash_sigs`` session cache (see
     dedup_minhash_signatures)."""
-    sigs = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "minhash_sigs"),
-        lambda: _signatures(spark, sf_dir),
-    )
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.expr(_band_key(b, th.SPARK)).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
+    bands = bands_for(_minhash_sigs(spark, sf_dir))
     buckets = bands.groupBy("band_id", "band_key").agg(
         F.count("*").alias("bucket_size")
     )
@@ -1047,12 +1017,7 @@ def dedup_prefixfilter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, amortizable across runs at 100 TB."""
     from pyspark.sql.window import Window
 
-    docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
-    sh = session_cached(
-        spark,
-        frame_memo_tag(sf_dir, "shingle_sets"),
-        lambda: docs.select("doc_id", F.expr(_shingle_set(th.SPARK)).alias("sh")),
-    )
+    sh = _shingle_sets(spark, sf_dir)
     inv = sh.select(
         "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("shingle")
     )

@@ -43,6 +43,7 @@ from end2end_data_pipeline_spark.operators.dedup import (
     _band_key,
     _jaccard_parts,
     bands_for,
+    cap_buckets,
     sig_ctes,
     signatures_for,
 )
@@ -93,16 +94,9 @@ def incremental_decisions(
     )
 
     batch_sigs = signatures_for(batch_docs).cache()
-    prior_bands = bands_for(minhash_store)
-    oversize = (
-        prior_bands.groupBy("band_id", "band_key")
-        .count()
-        .where(F.col("count") > bucket_cap)
-        .select("band_id", "band_key")
+    prior_bands = cap_buckets(bands_for(minhash_store), bucket_cap).select(
+        F.col("doc_id").alias("prior_id"), "band_id", "band_key"
     )
-    prior_bands = prior_bands.join(
-        F.broadcast(oversize), ["band_id", "band_key"], "left_anti"
-    ).select(F.col("doc_id").alias("prior_id"), "band_id", "band_key")
     cand = (
         bands_for(batch_sigs)
         .join(prior_bands, ["band_id", "band_key"])

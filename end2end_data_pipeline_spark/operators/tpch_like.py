@@ -23,6 +23,14 @@ from end2end_data_pipeline_spark.sources.tables import load_table, register_view
 CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
 
 
+def _facts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The plain-parquet orders and lineitem frames. Each query of the
+    orders-lineitem family has a private body that takes these two
+    frames; the registered query passes these, and its twin in
+    operators/bucketed.py passes the co-bucketed copies."""
+    return load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
+
+
 @query(
     "q6_forecast_revenue",
     oracle="""
@@ -75,10 +83,16 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS — expressed as a LEFT SEMI
     join (exactly what Catalyst rewrites EXISTS into), so the lineitem
     side never multiplies order rows."""
-    o = load_table(spark, sf_dir, "orders").where(
+    return _q4_order_priority(spark, sf_dir, *_facts(spark, sf_dir))
+
+
+def _q4_order_priority(
+    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
+    o = orders.where(
         (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
     )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = lineitem.select("l_orderkey", "l_shipdate")
     return (
         o.join(
             li,
@@ -112,8 +126,14 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CASE inside SUM — the pivot's general form). The shipdate filter
     lands on the lineitem scan BEFORE the join (pushdown through
     join)."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = load_table(spark, sf_dir, "lineitem").where(
+    return _q12_shipmode_priority(spark, sf_dir, *_facts(spark, sf_dir))
+
+
+def _q12_shipmode_priority(
+    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
+    o = orders.select("o_orderkey", "o_orderpriority")
+    li = lineitem.where(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -183,17 +203,21 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level join, global top-N. The aggregate runs FIRST and shrinks
     the join input (orders join a tiny key set, not raw lineitem) —
     the order of operations that matters at 100 TB."""
-    li = load_table(spark, sf_dir, "lineitem")
+    return _q18_large_orders(spark, sf_dir, *_facts(spark, sf_dir))
+
+
+def _q18_large_orders(
+    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
     big = (
-        li.groupBy("l_orderkey")
+        lineitem.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .where(F.col("qty") > 210)
         .select("l_orderkey")
     )
-    o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     return (
-        o.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
+        orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
         .select(
             "c_custkey",
@@ -229,15 +253,17 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: three-way join, each side pre-filtered at its
     scan, grouped revenue, global top-N. Customer filter is applied
     before the join so the semi-reduced key set drives it."""
+    return _q3_shipping_priority(spark, sf_dir, *_facts(spark, sf_dir))
+
+
+def _q3_shipping_priority(
+    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < "1997-01-01"
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > "1997-01-01"
-    )
+    o = orders.where(F.col("o_orderdate") < "1997-01-01")
+    li = lineitem.where(F.col("l_shipdate") > "1997-01-01")
     cents = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("bigint")
@@ -762,10 +788,16 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-reduction BEFORE the single fact-fact shuffle. The share is
     a DOUBLE division of two exactly-summed BIGINT cent totals, so
     the oracle hash is engine-stable (registry.py contract)."""
+    return _q8_market_share(spark, sf_dir, *_facts(spark, sf_dir))
+
+
+def _q8_market_share(
+    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
     p = load_table(spark, sf_dir, "part").where(
         F.col("p_type") == "ECONOMY"
     ).select("p_partkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
+    li = lineitem.select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     ).join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
     n = load_table(spark, sf_dir, "nation")
@@ -776,7 +808,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").join(
         F.broadcast(america_nations), F.col("c_nationkey") == F.col("am_nk")
     ).select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").where(
+    o = orders.where(
         (F.col("o_orderdate") >= "1995-01-01")
         & (F.col("o_orderdate") < "1997-01-01")
     ).join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey")).select(

@@ -48,6 +48,7 @@ from end2end_data_pipeline_spark.sources.tables import (
     session_memo,
     session_scratch,
     sf_tag,
+    stream_table,
 )
 
 # Fixed day-1 slice: every testdata SF spans 2024-01-01 .. 2024-01-30,
@@ -57,25 +58,6 @@ SLICE_END = "2024-01-02 00:00:00"
 MINUTE_FMT = "yyyy-MM-dd_HH-mm"  # stays a STRING partition value
 # (a "yyyy-MM-dd HH:mm" key would be re-inferred as timestamp on
 # read-back, reopening the NTZ/timezone seam the engine closed in r4)
-
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the ``events`` table for the replay
-    queries, handling BOTH fixture layouts: a single-file table
-    streams via a glob over ``sf_dir`` (the file source rejects a
-    plain file as its base path), a directory table streams directly
-    (a name glob over ``sf_dir`` would silently discover nothing
-    inside it — caught by the r9 single-row degenerate sweep). Schema
-    pinned from a footer-only batch read; ``ts`` normalized to a
-    timestamp the same way ``load_table`` does."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(path):
-        raw = reader.parquet(path)
-    else:
-        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
 
 def _day1_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -175,7 +157,7 @@ def warehouse_minute_dpp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minute_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-1 per-type counts per event-time minute, as a stream."""
     return (
-        _stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .where(
             (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
             & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
@@ -337,7 +319,7 @@ def session_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-slice replay holds state for the slice only."""
 
     def build() -> str:
-        stream = _stream_events(spark, sf_dir)
+        stream = stream_table(spark, sf_dir, "events")
         agg = (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
@@ -401,7 +383,7 @@ def event_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> str:
         kept = (
-            _stream_events(spark, sf_dir)
+            stream_table(spark, sf_dir, "events")
             .withColumn(
                 "bucket", F.floor(F.unix_timestamp("ts") / 600).cast("bigint")
             )
@@ -490,7 +472,7 @@ def sliding_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed windows evict (``streaming/pipeline.py``, golden-tested)."""
 
     def build() -> str:
-        stream = _stream_events(spark, sf_dir)
+        stream = stream_table(spark, sf_dir, "events")
         agg = (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
@@ -561,7 +543,7 @@ def enrich_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("mktsegment"),
         )
-        stream = _stream_events(spark, sf_dir)
+        stream = stream_table(spark, sf_dir, "events")
         agg = (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
@@ -666,7 +648,7 @@ def upsert_sink_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(vdir)
             os.replace(tmp, pointer)  # atomic re-point
 
-        stream = _stream_events(spark, sf_dir).where(
+        stream = stream_table(spark, sf_dir, "events").where(
             (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
             & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
         )
@@ -840,7 +822,7 @@ def view_purchase_stream_join_replay(
 
 
     def build() -> str:
-        stream = _stream_events(spark, sf_dir)
+        stream = stream_table(spark, sf_dir, "events")
         matched = purchases_after_views(
             stream.where(F.col("event_type") == "view"),
             stream.where(F.col("event_type") == "purchase"),
@@ -1077,7 +1059,7 @@ def error_streak_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
     def build() -> str:
-        stream = _stream_events(spark, sf_dir).withColumn(
+        stream = stream_table(spark, sf_dir, "events").withColumn(
             "user_id", F.col("user_id").cast("string")
         )
         alerts = error_streak_alerts(
@@ -1130,7 +1112,7 @@ def first_seen_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
     def build() -> str:
-        stream = _stream_events(spark, sf_dir).withColumn(
+        stream = stream_table(spark, sf_dir, "events").withColumn(
             "user_id", F.col("user_id").cast("string")
         )
         announced = first_seen_users(stream, ts_col="ts", watermark="60 days")

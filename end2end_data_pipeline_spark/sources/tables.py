@@ -158,7 +158,7 @@ def input_scaled_partitions(
 
     total = 0
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
+        p = table_path(sf_dir, t)
         if os.path.isdir(p):
             total += sum(
                 os.path.getsize(os.path.join(dp, f))
@@ -255,7 +255,7 @@ def model_memo_key(sf_dir: str, table: str) -> tuple:
     memos had drifted between verbatim and abspath keys)."""
     import os
 
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    st = os.stat(table_path(sf_dir, table))
     return (os.path.abspath(sf_dir), st.st_mtime_ns, st.st_size)
 
 
@@ -293,27 +293,67 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table. Path layout: ``{sf_dir}/{name}.parquet``.
+def table_path(sf_dir: str, name: str) -> str:
+    """Where a fixture dir keeps table ``name``:
+    ``{sf_dir}/{name}.parquet``, one parquet file or a directory of
+    part files."""
+    import os
 
-    Older fixtures wrote ``events.ts`` as a nanosecond parquet timestamp,
-    which Spark's TimestampType (microseconds) cannot represent; we read
-    it as a raw int64 (``nanosAsLong``) and truncate to microseconds —
-    the same truncation DuckDB applies when casting TIMESTAMP_NS down, so
-    oracle comparisons stay aligned (FIXTURES.md §4). Current fixtures
-    write untagged micros, normalized by ``_normalize_ntz``.
-    """
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The batch parquet read of one table, before normalization."""
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # integer division keeps full precision (a double round-trip
-            # would corrupt epoch-nanos > 2^53)
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return spark.read.parquet(table_path(sf_dir, name))
+
+
+def _normalize(df: DataFrame, name: str) -> DataFrame:
+    """The column types every reader of table ``name`` gets, batch or
+    stream: see ``load_table``."""
+    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+        # integer division keeps full precision (a double round-trip
+        # would corrupt epoch-nanos > 2^53)
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return _normalize_ntz(df)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table from ``table_path(sf_dir, name)``.
+
+    Every fixture under the driver's testdata, and every fixture the
+    repo's own writers produce, stores its timestamps as untagged
+    ``timestamp[us]``, normalized by ``_normalize_ntz``. The nanosecond
+    branch serves only older external fixtures that wrote ``events.ts``
+    as a nanosecond parquet timestamp, which Spark's TimestampType
+    (microseconds) cannot represent: it is read as a raw int64
+    (``nanosAsLong``, a session conf this read sets) and truncated to
+    microseconds — the same truncation DuckDB applies when casting
+    TIMESTAMP_NS down, so oracle comparisons stay aligned. That conf
+    write changes how every later parquet read of the session decodes
+    nanosecond timestamps; resolving the encoding once from the footer
+    and passing a schema (ROADMAP direction 1) would replace it.
+    """
+    return _normalize(_read_raw(spark, sf_dir, name), name)
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A file-stream source over one table with ``load_table``'s
+    schema and column types: the stream is pinned to the raw schema
+    the batch read sees, then normalized by the same rule. Both
+    fixture layouts stream through one path: a one-alternative glob
+    group, ``{sf_dir}/{<name>.parquet}``, matches the table whether it
+    is a single file (which the file source rejects as a plain base
+    path) or a directory (whose part files the glob match lists)."""
+    import os
+
+    schema = _read_raw(spark, sf_dir, name).schema
+    head, tail = os.path.split(table_path(sf_dir, name))
+    stream = spark.readStream.schema(schema).parquet(f"{head}/{{{tail}}}")
+    return _normalize(stream, name)
 
 
 def fan_out(spark: SparkSession, df: DataFrame, partitions: int | None = None) -> DataFrame:

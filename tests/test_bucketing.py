@@ -150,8 +150,10 @@ def test_bucketed_q4_twin_semi_join_is_exchange_free(spark, no_broadcast):
 def test_bucketed_q18_twin_agg_and_join_exchange_free(spark, no_broadcast):
     """Q18's HAVING pre-aggregate groups by the bucket key, so the
     AGGREGATION inherits the scan partitioning too: no orderkey
-    Exchange between either fact scan and the final top-N (customer
-    side is an explicit broadcast)."""
+    Exchange between either fact scan and the final top-N. The twin
+    runs the plain q18 body, whose customer join has no hint; with
+    broadcast disabled it shuffles on the customer key, which is not
+    an orderkey exchange."""
     from end2end_data_pipeline_spark.operators.bucketed import (
         q18_large_orders_bucketed,
     )

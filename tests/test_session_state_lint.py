@@ -76,6 +76,30 @@ def test_no_application_id_or_shared_tempdir_outside_the_registry():
     assert not found, found
 
 
+def test_each_frame_memo_tag_name_is_spelled_at_one_site():
+    """A shared frame has one accessor: a name literal passed to
+    ``frame_memo_tag`` at two call sites is one typo away from
+    building and pinning a second copy of the frame."""
+    sites: dict[str, list[str]] = {}
+    for path in sorted(SRC.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            fname = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if fname != "frame_memo_tag":
+                continue
+            args = node.args[1:2] + [k.value for k in node.keywords if k.arg == "name"]
+            for arg in args:
+                if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                    sites.setdefault(arg.value, []).append(
+                        f"{path.relative_to(SRC)}:{node.lineno}"
+                    )
+    assert sites, "no frame_memo_tag call found"
+    repeated = {name: where for name, where in sites.items() if len(where) > 1}
+    assert not repeated, repeated
+
+
 def _app(app_id: str):
     """Just enough of a SparkSession for the registry: an applicationId."""
     return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
