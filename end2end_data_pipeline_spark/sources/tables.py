@@ -9,18 +9,21 @@ prunes columns into the parquet scan (verify via
 This module also holds the engine's one session-state registry. Every
 per-application thing an operator keeps — cached and checkpointed
 frames, drained memory-sink tables, written layouts and fixtures,
-fitted model state, a registered data source — is an entry of
-``session_memo``. A key names its owner: ``session_cached`` and
-``session_checkpointed`` key on ``("cached", tag)`` and
-``("checkpointed", tag)``, a frame derived from a fixture dir takes its
-tag from ``frame_memo_tag`` (name + abspath, so relative and absolute
-callers share one entry), and model state keys on ``model_memo_key``
-(abspath, mtime, size). An entry is stored only after its build
-returns: a build that raises leaves nothing, and the next call builds
-again. Entries belong to one Spark application; the first call under a
-new ``applicationId`` drops them all (PySpark runs one SparkContext
-per process). Files an entry needs live under ``session_scratch``: one
-directory per application, removed when the interpreter exits.
+fitted model state, a registered data source, the parquet schema of
+each table ``load_table`` reads — is an entry of ``session_memo``. A
+key names its owner: ``session_cached`` and ``session_checkpointed``
+key on ``("cached", tag)`` and ``("checkpointed", tag)``, a frame
+derived from a fixture dir takes its tag from ``frame_memo_tag``
+(name + abspath, so relative and absolute callers share one entry),
+model state keys on ``model_memo_key`` and a table schema on
+``("schema", abspath, file_identity)``; both include the table's
+``file_identity``, the (relpath, mtime, size) of each of its files.
+An entry is stored only after its build returns: a build that raises
+leaves nothing, and the next call builds again. Entries belong to one
+Spark application; the first call under a new ``applicationId`` drops
+them all (PySpark runs one SparkContext per process). Files an entry
+needs live under ``session_scratch``: one directory per application,
+removed when the interpreter exits.
 """
 
 from __future__ import annotations
@@ -154,19 +157,10 @@ def input_scaled_partitions(
     table. ``factor`` scales for frames materially smaller than their
     input (e.g. codes vs raw vectors)."""
     import math
-    import os
 
-    total = 0
-    for t in tables:
-        p = table_path(sf_dir, t)
-        if os.path.isdir(p):
-            total += sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(p)
-                for f in fs
-            )
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
+    total = sum(
+        size for t in tables for _, _, size in file_identity(table_path(sf_dir, t))
+    )
     return max(1, math.ceil(total * factor / (target_mb * 1024 * 1024)))
 
 
@@ -248,15 +242,15 @@ def drain_to_memory(
 def model_memo_key(sf_dir: str, table: str) -> tuple:
     """Key part for MODEL STATE trained off one fixture table (k-means
     centroids, BPE merge lists, drained replay state): (abspath(sf_dir),
-    mtime_ns, size). One builder so every model entry keys identically
-    — abspath so mixed relative/absolute callers share one entry, and
-    (mtime, size) so a fixture regenerated at the same path within one
-    application is never served stale state (r11 advice: the three
-    memos had drifted between verbatim and abspath keys)."""
+    ``file_identity`` of the table). One builder so every model entry
+    keys identically — abspath so mixed relative/absolute callers share
+    one entry, and the file identity so a fixture regenerated at the
+    same path within one application, as one file or as part files,
+    is never served stale state (r11 advice: the three memos had
+    drifted between verbatim and abspath keys)."""
     import os
 
-    st = os.stat(table_path(sf_dir, table))
-    return (os.path.abspath(sf_dir), st.st_mtime_ns, st.st_size)
+    return (os.path.abspath(sf_dir), file_identity(table_path(sf_dir, table)))
 
 
 def sf_tag(sf_abs: str) -> str:
@@ -302,13 +296,68 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def file_identity(path: str) -> tuple:
+    """The files a table path holds, as sorted ``(relpath, mtime_ns,
+    size)`` triples: one triple with relpath ``"."`` for a single
+    file, one per file under a directory of part files, none when the
+    path does not exist locally. A key that includes it changes when
+    the table is rewritten in place or gains or loses a part file."""
+    import os
+
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs]
+    stats = ((f, os.stat(f)) for f in files)
+    return tuple(
+        sorted((os.path.relpath(f, path), st.st_mtime_ns, st.st_size) for f, st in stats)
+    )
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _infer_schema(spark: SparkSession, path: str, name: str):
+    """The schema Spark infers for the parquet table at ``path`` (one
+    Spark job). When the footer (read by pyarrow, no job) stores
+    ``events.ts`` in nanoseconds, the inference runs under
+    ``nanosAsLong``, so ``ts`` is pinned as LongType, and the conf then
+    gets its prior value back: a read with the pinned schema decodes
+    the column as raw int64 without it."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    if name == "events":
+        ts = ds.dataset(path, format="parquet").schema.field("ts").type
+        if pa.types.is_timestamp(ts) and ts.unit == "ns":
+            prior = spark.conf.get(_NANOS_AS_LONG)
+            spark.conf.set(_NANOS_AS_LONG, "true")
+            try:
+                return spark.read.parquet(path).schema
+            finally:
+                spark.conf.set(_NANOS_AS_LONG, prior)
+    return spark.read.parquet(path).schema
+
+
 def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The batch parquet read of one table, before normalization."""
+    """The batch parquet read of one table, before normalization, with
+    its schema pinned: the schema is inferred once per application and
+    ``file_identity`` of the table, so the read only lists files."""
+    import os
+
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    files = file_identity(path)
+    if not files:
+        # nothing to pin: a missing path raises Spark's own error
+        return spark.read.parquet(path)
+    schema = session_memo(
+        spark,
+        ("schema", os.path.abspath(path), files),
+        lambda: _infer_schema(spark, path, name),
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def _normalize(df: DataFrame, name: str) -> DataFrame:
@@ -329,13 +378,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``timestamp[us]``, normalized by ``_normalize_ntz``. The nanosecond
     branch serves only older external fixtures that wrote ``events.ts``
     as a nanosecond parquet timestamp, which Spark's TimestampType
-    (microseconds) cannot represent: it is read as a raw int64
-    (``nanosAsLong``, a session conf this read sets) and truncated to
-    microseconds — the same truncation DuckDB applies when casting
-    TIMESTAMP_NS down, so oracle comparisons stay aligned. That conf
-    write changes how every later parquet read of the session decodes
-    nanosecond timestamps; resolving the encoding once from the footer
-    and passing a schema (ROADMAP direction 1) would replace it.
+    (microseconds) cannot represent: it is read as a raw int64 and
+    truncated to microseconds — the same truncation DuckDB applies when
+    casting TIMESTAMP_NS down, so oracle comparisons stay aligned.
+
+    The read is built with the table's schema pinned (``_read_raw``),
+    so it starts no Spark job once the schema is known, and it leaves
+    no session conf changed for the reads that follow.
     """
     return _normalize(_read_raw(spark, sf_dir, name), name)
 

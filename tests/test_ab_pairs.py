@@ -9,10 +9,13 @@ from __future__ import annotations
 import pytest
 
 from tools.ab_pairs import (
+    QUIET_STEAL_TICKS,
     drain_summary,
     drained_early,
     parse_seeds,
     quartiles,
+    quiet_pairs,
+    report,
     run_line,
     steal_ticks,
     verdict,
@@ -82,11 +85,11 @@ intr 123456 0 0
 """
 
 
-def _run(measured_s: float, ops: int, steal: int) -> dict:
+def _run(measured_s: float, ops: int, steal: int, p50: float = 0.8) -> dict:
     return {
         "correct": True,
         "failed": 0,
-        "metrics": {"op_latency_p50_s": {"value": 0.8, "unit": "s"}},
+        "metrics": {"op_latency_p50_s": {"value": p50, "unit": "s"}},
         "notes": {"ops": ops, "measured_s": measured_s},
         "steal_ticks": steal,
     }
@@ -111,3 +114,30 @@ def test_runs_that_drain_their_input_early_are_flagged():
     assert parent_line.startswith("parent: 0/2 runs drained early (measured_s < 20)")
     assert change_line.startswith("change: 2/2 runs drained early (measured_s < 20)")
     assert "ops 21/21/21" in change_line
+
+
+SPEC = {
+    "end_to_end": [{"name": "op_latency_p50_s", "better": "lower", "bound": 0.25}],
+    "per_layer": [],
+}
+
+
+def test_report_prints_the_verdict_over_quiet_pairs_beside_the_whole_set():
+    # eight quiet pairs the change wins by far; in two contended pairs
+    # the change run drew the steal and read slower
+    steal = [120, 90, 1755, 300, 80, QUIET_STEAL_TICKS, 60, 210, 40, 150]
+    pairs = [
+        {
+            "parent": _run(20.1, 20, 70, p50=p),
+            "change": _run(20.1, 20, s, p50=p + 0.9 if s >= QUIET_STEAL_TICKS else p - 0.7),
+        }
+        for p, s in zip(PARENT, steal)
+    ]
+    assert len(quiet_pairs(pairs)) == 8  # a run at the threshold is not quiet
+    head, line = report(pairs, SPEC)
+    assert head.endswith(f"quiet verdict (8/10 pairs < {QUIET_STEAL_TICKS} steal)")
+    assert line.endswith(f"{'not worse':10}  gain")  # 8/10 wins: no whole-set gain
+    # with no quiet pair there is no quiet verdict
+    for p in pairs:
+        p["parent"]["steal_ticks"] = 5000
+    assert report(pairs, SPEC)[1].endswith(f"{'not worse':10}  -")

@@ -32,7 +32,11 @@ operations are printed in the summary.
 Each run's line also shows the notes line's ``ops`` and ``measured_s``
 and the host's CPU steal ticks during the run (the ``steal`` column of
 the ``cpu`` line of ``/proc/stat``, read before and after), so runs can
-be sorted by contention. A run whose ``measured_s`` is below the
+be sorted by contention. Next to each whole-set verdict the summary
+prints the verdict over the quiet pairs only, those in which both runs
+drew fewer than ``QUIET_STEAL_TICKS`` steal ticks, and how many pairs
+that is: other tenants' CPU steal, not code, dominates the spread of a
+contended run. A run whose ``measured_s`` is below the
 benchmark's ``run_seconds`` drained its input before the time was up;
 it is flagged ``early``, and the summary counts such runs per side.
 """
@@ -48,6 +52,8 @@ import sys
 
 WIN_SHARE = 0.9
 RUN_TIMEOUT_S = 900
+# a pair is quiet when both of its runs drew fewer steal ticks than this
+QUIET_STEAL_TICKS = 1000
 
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -180,19 +186,48 @@ def drain_summary(pairs: list[dict], run_seconds: float) -> list[str]:
     return lines
 
 
-def report(pairs: list[dict], spec: dict) -> list[str]:
-    """One line per metric found in the runs."""
+def quiet_pairs(pairs: list[dict]) -> list[dict]:
+    """The pairs in which both runs drew fewer than
+    ``QUIET_STEAL_TICKS`` steal ticks."""
+    return [
+        p for p in pairs
+        if max(p["parent"]["steal_ticks"], p["change"]["steal_ticks"]) < QUIET_STEAL_TICKS
+    ]
+
+
+def _values(pairs: list[dict], side: str, name: str) -> list[float]:
+    return [r[side]["metrics"][name]["value"] for r in pairs]
+
+
+def _verdict_over(pairs: list[dict], metric: dict) -> str:
+    """``verdict`` of one end-to-end metric over ``pairs``; "-" for none."""
+    if not pairs:
+        return "-"
     failed = tuple(sum(r[side]["failed"] for r in pairs) for side in ("parent", "change"))
+    name = metric["name"]
+    return verdict(
+        _values(pairs, "parent", name), _values(pairs, "change", name),
+        metric["better"], metric["bound"], failed,
+    )
+
+
+def report(pairs: list[dict], spec: dict) -> list[str]:
+    """One line per metric found in the runs; an end-to-end metric gets
+    its verdict over all pairs and over the quiet pairs."""
     end_to_end = {m["name"]: m for m in spec["end_to_end"]}
     better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
-    lines = [f"{'metric':36} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  verdict"]
+    quiet = quiet_pairs(pairs)
+    quiet_head = f"quiet verdict ({len(quiet)}/{len(pairs)} pairs < {QUIET_STEAL_TICKS} steal)"
+    lines = [
+        f"{'metric':36} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  "
+        f"{'verdict':10}  {quiet_head}"
+    ]
     for name in pairs[0]["parent"]["metrics"]:
-        p = [r["parent"]["metrics"][name]["value"] for r in pairs]
-        c = [r["change"]["metrics"][name]["value"] for r in pairs]
+        p, c = _values(pairs, "parent", name), _values(pairs, "change", name)
         m = end_to_end.get(name)
-        v = verdict(p, c, m["better"], m["bound"], failed) if m else "-"
+        v, qv = (_verdict_over(pairs, m), _verdict_over(quiet, m)) if m else ("-", "-")
         wins = win_share(p, c, better.get(name, "lower"))
-        lines.append(f"{name:36} {_fmt(p):>26} {_fmt(c):>26} {wins:>6.2f}  {v}")
+        lines.append(f"{name:36} {_fmt(p):>26} {_fmt(c):>26} {wins:>6.2f}  {v:10}  {qv}")
     return lines
 
 
