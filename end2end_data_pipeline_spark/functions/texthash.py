@@ -71,19 +71,6 @@ def shingles(toks_expr: str, n: int, dialect: str) -> str:
     return f"list_transform(range(1, len({toks_expr}) - {n - 2}), i -> {joined})"
 
 
-def minhash(shingles_expr: str, salt: int, dialect: str) -> str:
-    """One MinHash value: min over shingles of the salted hash.
-
-    NOTE: costs one md5 per (shingle, salt). For k-hash signatures use
-    ``minhash_affine`` over pre-hashed shingles instead — one md5 per
-    shingle total, then k cheap affine transforms.
-    """
-    h = salted_md5h(salt, "s", dialect)
-    if dialect == SPARK:
-        return f"array_min(transform({shingles_expr}, s -> {h}))"
-    return f"list_min(list_transform({shingles_expr}, s -> {h}))"
-
-
 # Universal-hash family for fast k-MinHash (Carter-Wegman):
 # h_j(x) = (a_j * x + b_j) mod P over base hashes x < 2^30.
 # a_j, b_j are fixed pseudo-random constants derived from md5 in Python

@@ -19,10 +19,11 @@ from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.functions import vectors as vec
 from end2end_data_pipeline_spark.operators.event_analytics import (
     SESSION_GAP_MINUTES,
+    _sessionized,
 )
 from end2end_data_pipeline_spark.operators.similarity import (
-    EMB_BUCKET_CAP,
-    _qbase,
+    _CAPPED_BUCKETS_SQL,
+    _capped_lsh_pairs,
     _qbase_sql,
 )
 from end2end_data_pipeline_spark.registry import query
@@ -78,15 +79,7 @@ def session_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     path rollup, whose key space is O(|event_types|^{PATH_LEN}),
     tiny. The collect_list is bounded at {PATH_LEN} elements by the
     rank filter — never a whole-session materialization."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
-    new_session = F.when(
-        gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), F.lit(1)
-    ).otherwise(F.lit(0))
-    sess = ev.withColumn("new_session", new_session).withColumn(
-        "sid", F.sum("new_session").over(w)
-    )
+    sess = _sessionized(load_table(spark, sf_dir, "events"))
     wr = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     ranked = sess.withColumn("rn", F.row_number().over(wr)).where(
         F.col("rn") <= PATH_LEN
@@ -337,14 +330,8 @@ def _sweep_oracle() -> str:
     )
     return (
         _qbase_sql()
-        + f""", bucketed AS (
-      SELECT *, {vec.lsh_bucket('qv', th.DUCK)} AS bucket FROM qbase
-    ), ok_buckets AS (
-      SELECT bucket FROM bucketed GROUP BY bucket
-      HAVING count(*) <= {EMB_BUCKET_CAP}
-    ), capped AS (
-      SELECT bucketed.* FROM bucketed JOIN ok_buckets USING (bucket)
-    ), cand AS (
+        + _CAPPED_BUCKETS_SQL
+        + f""", cand AS (
       SELECT {cos} AS cosine
       FROM capped a JOIN capped b
         ON a.bucket = b.bucket AND a.vec_id < b.vec_id
@@ -368,37 +355,7 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs); the sweep itself is ONE pass over candidates with a
     conditional sum per threshold (no fanout, no extra join), then a
     driver-trivial unpivot of the 1-row aggregate."""
-    base = _qbase(spark, sf_dir).withColumn(
-        "bucket", F.expr(vec.lsh_bucket("qv", th.SPARK))
-    )
-    oversize = (
-        base.groupBy("bucket")
-        .count()
-        .where(F.col("count") > EMB_BUCKET_CAP)
-        .select("bucket")
-    )
-    base = base.join(F.broadcast(oversize), ["bucket"], "left_anti")
-    left = base.select(
-        F.col("vec_id").alias("left_id"),
-        F.col("qv").alias("l_qv"),
-        F.col("norm2").alias("l_norm2"),
-        F.col("bucket").alias("l_bucket"),
-    )
-    right = base.select(
-        F.col("vec_id").alias("right_id"),
-        F.col("qv").alias("r_qv"),
-        F.col("norm2").alias("r_norm2"),
-        F.col("bucket").alias("r_bucket"),
-    )
-    cand = left.join(
-        right,
-        (F.col("l_bucket") == F.col("r_bucket"))
-        & (F.col("left_id") < F.col("right_id")),
-    ).select(
-        F.expr(
-            vec.cosine_q("l_qv", "r_qv", "l_norm2", "r_norm2", th.SPARK)
-        ).alias("cosine")
-    )
+    cand = _capped_lsh_pairs(spark, sf_dir)
     # when/otherwise(0), not a bare boolean cast: a candidate pair of
     # NULL-embedding vectors has NULL cosine, and the oracle's
     # CASE ... ELSE 0 counts it as below-threshold; a bare cast would
@@ -493,14 +450,7 @@ def sessions_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tools/plan_audit.py``) left-joined to the counts — matrix size
     is independent of corpus size."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
-    new_session = F.when(
-        gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), F.lit(1)
-    ).otherwise(F.lit(0))
-    sess = ev.withColumn("new_session", new_session).withColumn(
-        "sid", F.sum("new_session").over(w)
-    )
+    sess = _sessionized(ev)
     ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     counts = (
         sess.select(

@@ -893,8 +893,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- LSH band-bucket diagnostics ------------------------------------
 
-BAND_STAT_TOP = 20
-
 
 @query(
     "dedup_band_stats",

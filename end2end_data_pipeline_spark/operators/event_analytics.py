@@ -44,6 +44,54 @@ ERROR_K_THRESHOLD = 25
 SESSION_GAP_MINUTES = 30
 
 
+def _sessionized(events: DataFrame) -> DataFrame:
+    """``events`` plus the gap sessionizer's columns: ``new_session``
+    is 1 where the user's previous event, in (ts, event_id) order, is
+    absent or more than ``SESSION_GAP_MINUTES`` back, and ``sid`` is
+    the running count of those starts, the user's session index. The
+    lag and the running sum share one user_id partitioning. The running
+    sum keeps Spark's default RANGE frame, which equals a ROWS frame
+    because event_id is unique. The gap is read at call time, so every
+    sessionized query follows the one constant."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
+    new_session = F.when(
+        gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), F.lit(1)
+    ).otherwise(F.lit(0))
+    return events.withColumn("new_session", new_session).withColumn(
+        "sid", F.sum("new_session").over(w)
+    )
+
+
+def _minute_spine(events: DataFrame) -> DataFrame:
+    """(m): every minute from the first event's minute to the last
+    event's, exploded from a one-row min/max aggregate (a year is only
+    ~526k minutes)."""
+    bounds = events.agg(
+        F.date_trunc("minute", F.min("ts")).alias("tmin"),
+        F.date_trunc("minute", F.max("ts")).alias("tmax"),
+    )
+    return bounds.select(
+        F.explode(
+            F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))
+        ).alias("m")
+    )
+
+
+def _first_view_purchase(events: DataFrame) -> DataFrame:
+    """(user_id, first_view_ms, first_purchase_ms): each user's first
+    view and first purchase in epoch ms (NULL when absent), one
+    conditional-min aggregate on user_id."""
+    return events.groupBy("user_id").agg(
+        F.min(
+            F.when(F.col("event_type") == "view", F.unix_millis("ts"))
+        ).alias("first_view_ms"),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.unix_millis("ts"))
+        ).alias("first_purchase_ms"),
+    )
+
+
 def with_status(events: DataFrame) -> DataFrame:
     """Derive the SUCCESS/ERROR status dimension from props.k (F8/P4)."""
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
@@ -223,14 +271,8 @@ def event_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 — gap-based sessionization (the reference generates sessions
     but never analyzes them). One shuffle on user_id serves both the lag
     window and the final per-user aggregate."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
-    new_session = F.when(
-        gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), F.lit(1)
-    ).otherwise(F.lit(0))
     return (
-        events.withColumn("new_session", new_session)
+        _sessionized(load_table(spark, sf_dir, "events"))
         .groupBy("user_id")
         .agg(
             F.sum("new_session").alias("n_sessions"),
@@ -382,15 +424,7 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows their first view. One shuffle on user_id (conditional-min
     aggregation), then an O(users) rollup — the funnel shape that
     scales, vs the self-join formulation that doesn't."""
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.unix_millis("ts"))
-        ).alias("first_view_ms"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.unix_millis("ts"))
-        ).alias("first_purchase_ms"),
-    )
+    firsts = _first_view_purchase(load_table(spark, sf_dir, "events"))
     viewer = F.col("first_view_ms").isNotNull()
     converted = viewer & (F.col("first_purchase_ms") > F.col("first_view_ms"))
     return firsts.agg(
@@ -489,15 +523,7 @@ def event_minute_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast as the LEFT side builds); the event side is the usual
     partial-agg minute rollup, so nothing new shuffles."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.date_trunc("minute", F.min("ts")).alias("tmin"),
-        F.date_trunc("minute", F.max("ts")).alias("tmax"),
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))
-        ).alias("m")
-    )
+    spine = _minute_spine(ev)
     counts = ev.groupBy(F.date_trunc("minute", F.col("ts")).alias("m")).agg(
         F.count("*").alias("c")
     )

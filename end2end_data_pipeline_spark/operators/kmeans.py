@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.functions import vectors as vec
+from end2end_data_pipeline_spark.operators.similarity import _pq_sqdist
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
     fan_out,
@@ -49,11 +50,9 @@ SHIFT = 10_000_000
 
 
 def _dist2_spark(cv: list[int]) -> str:
+    """Exact squared L2 from ``qv`` to the literal centroid ``cv``."""
     lit = "array(" + ", ".join(f"{c}L" for c in cv) + ")"
-    return (
-        f"aggregate(zip_with(qv, {lit}, (x, c) -> (x - c) * (x - c)), "
-        f"0L, (acc, v) -> acc + v)"
-    )
+    return _pq_sqdist("qv", lit, th.SPARK)
 
 
 def _assign(base: DataFrame, centroids: dict[int, list[int]]) -> DataFrame:

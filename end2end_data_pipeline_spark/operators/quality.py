@@ -19,6 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from end2end_data_pipeline_spark.operators.event_analytics import (
+    SESSION_GAP_MINUTES,
+    _first_view_purchase,
+    _minute_spine,
+    _sessionized,
+)
 from end2end_data_pipeline_spark.operators.similarity import (
     _qbase,
     _qbase_sql,
@@ -297,15 +303,7 @@ def minute_anomaly_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     where even minutes overflow one partition, cut the spine into
     day ranges with {TRAIL}-minute overlap."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.date_trunc("minute", F.min("ts")).alias("tmin"),
-        F.date_trunc("minute", F.max("ts")).alias("tmax"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))).alias(
-            "m"
-        )
-    )
+    spine = _minute_spine(ev)
     counts = ev.groupBy(F.date_trunc("minute", F.col("ts")).alias("m")).agg(
         F.count("*").alias("c")
     )
@@ -652,15 +650,7 @@ def event_conversion_delay_histogram(
 
     Scale: one conditional-min shuffle on user_id, then an O(users)
     rollup into five bands — no self-join, no window."""
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.unix_millis("ts"))
-        ).alias("first_view_ms"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.unix_millis("ts"))
-        ).alias("first_purchase_ms"),
-    )
+    firsts = _first_view_purchase(load_table(spark, sf_dir, "events"))
     conv = firsts.where(
         F.col("first_view_ms").isNotNull()
         & (F.col("first_purchase_ms") > F.col("first_view_ms"))
@@ -1506,15 +1496,7 @@ def event_minute_value_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition-rollup precedent as ``minute_anomaly_ratio``) —
     at a multi-year horizon, cut by day with a carried seed."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.date_trunc("minute", F.min("ts")).alias("tmin"),
-        F.date_trunc("minute", F.max("ts")).alias("tmax"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))).alias(
-            "m"
-        )
-    )
+    spine = _minute_spine(ev)
     obs = (
         ev.where(F.col("value").isNotNull())
         .groupBy(F.date_trunc("minute", F.col("ts")).alias("m"))
@@ -1677,11 +1659,11 @@ def user_type_diversity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_bounce_rate_daily",
-    oracle="""
+    oracle=f"""
     WITH gaps AS (
       SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                       OR ts - lag(ts) OVER w > INTERVAL {SESSION_GAP_MINUTES} MINUTE
                   THEN 1 ELSE 0 END AS new_session
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1709,20 +1691,12 @@ def user_type_diversity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily bounce rate: share of sessions containing exactly one
     event, sessions attributed to the day they started — the classic
-    engagement-health metric, on the same 30-minute gap
-    sessionization as ``event_sessionization`` / ``session_top_paths``.
+    engagement-health metric, over the sessions of
+    ``event_analytics._sessionized``.
 
-    Scale: one user_id shuffle serves the lag window and the running
-    session index; sessions collapse to one row each (min ts + count),
-    then an O(days) rollup; the rate is one division of exact
-    counts."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("double") - F.lag(F.col("ts")).over(w).cast("double")
-    new_session = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
-    sess = ev.withColumn("new_session", new_session).withColumn(
-        "sid", F.sum("new_session").over(w)
-    )
+    Scale: sessions collapse to one row each (min ts + count), then an
+    O(days) rollup; the rate is one division of exact counts."""
+    sess = _sessionized(load_table(spark, sf_dir, "events"))
     per_session = sess.groupBy("user_id", "sid").agg(
         F.date_format(F.date_trunc("day", F.min("ts")), "yyyy-MM-dd").alias(
             "day"
@@ -2339,15 +2313,7 @@ def event_minute_value_lerp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``minute_anomaly_ratio``) — at a multi-year horizon, cut by day
     with carried seeds."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.date_trunc("minute", F.min("ts")).alias("tmin"),
-        F.date_trunc("minute", F.max("ts")).alias("tmax"),
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))
-        ).alias("m")
-    )
+    spine = _minute_spine(ev)
     obs = (
         ev.where(F.col("value").isNotNull())
         .groupBy(F.date_trunc("minute", F.col("ts")).alias("m"))
@@ -2460,15 +2426,7 @@ def event_minute_crosscorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     index against the session-cached spine frame, never on raw
     events."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.date_trunc("minute", F.min("ts")).alias("tmin"),
-        F.date_trunc("minute", F.max("ts")).alias("tmax"),
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("tmin", "tmax", F.expr("INTERVAL 1 MINUTE"))
-        ).alias("m")
-    ).select(F.expr("CAST(m AS BIGINT) div 60").alias("em"))
+    spine = _minute_spine(ev).select(F.expr("CAST(m AS BIGINT) div 60").alias("em"))
     em_of = F.expr("CAST(date_trunc('minute', ts) AS BIGINT) div 60")
 
     def series(etype: str, out: str):

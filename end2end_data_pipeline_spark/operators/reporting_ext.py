@@ -41,6 +41,7 @@ from end2end_data_pipeline_spark.functions.texthash import (
 )
 from end2end_data_pipeline_spark.operators.event_analytics import (
     SESSION_GAP_MINUTES,
+    _sessionized,
 )
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
@@ -97,18 +98,7 @@ def session_concurrency_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     then reduce to an O(#minutes) spine (<= 1440/day regardless of
     event volume), so the final unpartitioned running-sum window is
     bounded by calendar time, not data size."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_secs = F.col("ts").cast("double") - F.lag("ts").over(w).cast("double")
-    new_s = F.when(
-        gap_secs.isNull() | (gap_secs > SESSION_GAP_MINUTES * 60), F.lit(1)
-    ).otherwise(F.lit(0))
-    sids = events.withColumn("new_s", new_s).withColumn(
-        "sid",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sids = _sessionized(load_table(spark, sf_dir, "events"))
     sessions = sids.groupBy("user_id", "sid").agg(
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts")
     )

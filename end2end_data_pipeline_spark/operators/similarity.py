@@ -39,6 +39,22 @@ QUERY_STRIDE = 50  # vec_id % 50 == 0 -> 2% of vectors are queries
 TOP_K = 3
 
 
+def _top_k(pairs: DataFrame, score: str, descending: bool) -> DataFrame:
+    """(query_id, neighbor_id, <score>, rank): each query's TOP_K
+    neighbors in ``pairs`` by ``score`` (highest first when
+    ``descending``, as for a cosine; lowest first for a distance),
+    ties broken on neighbor_id. The rank window runs on the small
+    query key space."""
+    order = F.col(score).desc() if descending else F.col(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", score, "rank")
+        .orderBy("query_id", "rank")
+    )
+
+
 def _qbase_sql() -> str:
     q = vec.quantize("embedding", th.DUCK)
     return f"""
@@ -110,15 +126,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(pairs, "cosine", descending=True)
 
 
 @query(
@@ -190,15 +198,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(pairs, "cosine", descending=True)
 
 
 NEARDUP_COSINE = 0.30  # driver corpus is near-orthogonal random; real
@@ -210,36 +210,23 @@ NEARDUP_COSINE = 0.30  # driver corpus is near-orthogonal random; real
 # generation on BOTH engines before the self-join.
 EMB_BUCKET_CAP = 200
 
-
-@query(
-    "dedup_embedding_neardup",
-    oracle=_qbase_sql()
-    + f""", bucketed AS (
+# DuckDB twin of ``_capped_lsh_pairs``' bucketing: ``capped`` is qbase
+# with its LSH bucket, minus the buckets above EMB_BUCKET_CAP.
+_CAPPED_BUCKETS_SQL = f""", bucketed AS (
       SELECT *, {vec.lsh_bucket('qv', th.DUCK)} AS bucket FROM qbase
     ), ok_buckets AS (
       SELECT bucket FROM bucketed GROUP BY bucket
       HAVING count(*) <= {EMB_BUCKET_CAP}
     ), capped AS (
       SELECT bucketed.* FROM bucketed JOIN ok_buckets USING (bucket)
-    )
-    SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-           {vec.cosine_q('a.qv', 'b.qv', 'a.norm2', 'b.norm2', th.DUCK)} AS cosine
-    FROM capped a JOIN capped b
-      ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE {vec.cosine_q('a.qv', 'b.qv', 'a.norm2', 'b.norm2', th.DUCK)}
-          >= {NEARDUP_COSINE}
-    ORDER BY left_id, right_id
-    """,
-)
-def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-candidate-generated:
-    candidate pairs come from an equi-join on the LSH bucket (never the
-    O(n^2) cross join), then the exact quantized cosine verifies each
-    candidate. The oracle replays the identical bucketing + verify, so
-    the comparison is exact. The recall/throughput dial is N_PLANES
-    (fewer planes -> bigger buckets -> higher recall, more compare
-    work) — at 100 TB you'd also OR multiple independent plane sets,
-    exactly like MinHash banding."""
+    )"""
+
+
+def _capped_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(left_id, right_id, cosine): every pair of vectors, left_id <
+    right_id, that share an LSH bucket of at most EMB_BUCKET_CAP
+    vectors, with its exact quantized cosine — candidates from a
+    bucket equi-join, never the O(n^2) cross join."""
     base = _qbase(spark, sf_dir).withColumn(
         "bucket", F.expr(vec.lsh_bucket("qv", th.SPARK))
     )
@@ -262,7 +249,7 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm2").alias("r_norm2"),
         F.col("bucket").alias("r_bucket"),
     )
-    pairs = left.join(
+    return left.join(
         right,
         (F.col("l_bucket") == F.col("r_bucket"))
         & (F.col("left_id") < F.col("right_id")),
@@ -273,8 +260,34 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec.cosine_q("l_qv", "r_qv", "l_norm2", "r_norm2", th.SPARK)
         ).alias("cosine"),
     )
+
+
+@query(
+    "dedup_embedding_neardup",
+    oracle=_qbase_sql()
+    + _CAPPED_BUCKETS_SQL
+    + f"""
+    SELECT a.vec_id AS left_id, b.vec_id AS right_id,
+           {vec.cosine_q('a.qv', 'b.qv', 'a.norm2', 'b.norm2', th.DUCK)} AS cosine
+    FROM capped a JOIN capped b
+      ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    WHERE {vec.cosine_q('a.qv', 'b.qv', 'a.norm2', 'b.norm2', th.DUCK)}
+          >= {NEARDUP_COSINE}
+    ORDER BY left_id, right_id
+    """,
+)
+def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs, LSH-candidate-generated:
+    candidate pairs come from an equi-join on the LSH bucket (never the
+    O(n^2) cross join), then the exact quantized cosine verifies each
+    candidate. The oracle replays the identical bucketing + verify, so
+    the comparison is exact. The recall/throughput dial is N_PLANES
+    (fewer planes -> bigger buckets -> higher recall, more compare
+    work) — at 100 TB you'd also OR multiple independent plane sets,
+    exactly like MinHash banding."""
     return (
-        pairs.where(F.col("cosine") >= NEARDUP_COSINE)
+        _capped_lsh_pairs(spark, sf_dir)
+        .where(F.col("cosine") >= NEARDUP_COSINE)
         .orderBy("left_id", "right_id")
     )
 
@@ -468,15 +481,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(pairs, "cosine", descending=True)
 
 
 IVF_NPROBE = 2
@@ -585,15 +590,7 @@ def probe_ivf_index(index: DataFrame, queries: DataFrame) -> DataFrame:
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(pairs, "cosine", descending=True)
 
 
 def append_ivf_index(
@@ -1152,7 +1149,8 @@ PQ_SUBDIM = vec.EMBED_DIM // PQ_M
 
 
 def _pq_sqdist(a: str, b: str, dialect: str) -> str:
-    """Exact integer squared L2 between two quantized subvectors."""
+    """Exact integer squared L2 between two quantized integer arrays
+    (PQ subvectors here, points and literal centroids in k-means)."""
     if dialect == th.SPARK:
         return (
             f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
@@ -1164,16 +1162,23 @@ def _pq_sqdist(a: str, b: str, dialect: str) -> str:
     )
 
 
-def _pq_subs(base: DataFrame) -> DataFrame:
-    """(vec_id, subspace, sv): every embedding exploded into its PQ_M
-    quantized subvectors — the shared front end of codebook census,
-    corpus encoding, and query distance tables."""
+def _pq_subs(
+    frame: DataFrame,
+    keys: tuple[str, ...] = ("vec_id",),
+    vector: str = "qv",
+    prefix: str = "",
+) -> DataFrame:
+    """(*keys, <prefix>subspace, <prefix>sv): the ``vector`` column of
+    every row split into its PQ_M quantized subvectors — the shared
+    front end of codebook census, corpus encoding, and query distance
+    tables, for raw vectors and residuals alike."""
     slices = F.array(
-        *[F.slice("qv", i * PQ_SUBDIM + 1, PQ_SUBDIM) for i in range(PQ_M)]
+        *[F.slice(vector, i * PQ_SUBDIM + 1, PQ_SUBDIM) for i in range(PQ_M)]
     )
-    return base.select(
-        "vec_id", F.posexplode(slices).alias("subspace", "sv")
-    ).select("vec_id", F.col("subspace").cast("int").alias("subspace"), "sv")
+    sub, sv = f"{prefix}subspace", f"{prefix}sv"
+    return frame.select(*keys, F.posexplode(slices).alias(sub, sv)).select(
+        *keys, F.col(sub).cast("int").alias(sub), sv
+    )
 
 
 def _pq_codebook(subs: DataFrame) -> DataFrame:
@@ -1203,18 +1208,7 @@ def _pq_codes_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     int per row; functionally dependent on vec_id, so grouping by it
     changes nothing) — one encode serves both the flat-PQ and IVF-PQ
     shapes."""
-    assigned = _ivf_assign(spark, sf_dir)
-    slices = F.array(
-        *[F.slice("qv", i * PQ_SUBDIM + 1, PQ_SUBDIM) for i in range(PQ_M)]
-    )
-    subs = assigned.select(
-        "vec_id", "cell_id", F.posexplode(slices).alias("subspace", "sv")
-    ).select(
-        "vec_id",
-        "cell_id",
-        F.col("subspace").cast("int").alias("subspace"),
-        "sv",
-    )
+    subs = _pq_subs(_ivf_assign(spark, sf_dir), keys=("vec_id", "cell_id"))
     scored = subs.join(_pq_codebook(subs), "subspace").withColumn(
         "d", F.expr(_pq_sqdist("sv", "cv", th.SPARK))
     )
@@ -1394,13 +1388,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("qd").cast("bigint").alias("adc_sqdist"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_sqdist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_sqdist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(adc, "adc_sqdist", descending=False)
 
 
 ann_pq_topk.__doc__ = ann_pq_topk.__doc__.replace("{M}", str(PQ_M)).replace(
@@ -1529,13 +1517,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("qd").cast("bigint").alias("adc_sqdist"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_sqdist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_sqdist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(adc, "adc_sqdist", descending=False)
 
 
 ann_ivfpq_topk.__doc__ = (
@@ -1585,17 +1567,7 @@ def _pq_resid_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = assigned.join(F.broadcast(cents), "cell_id").withColumn(
         "rv", F.expr(vec.sub_q("qv", "c_qv", th.SPARK))
     )
-    slices = F.array(
-        *[F.slice("rv", i * PQ_SUBDIM + 1, PQ_SUBDIM) for i in range(PQ_M)]
-    )
-    return resid.select(
-        "vec_id", "cell_id", F.posexplode(slices).alias("subspace", "sv")
-    ).select(
-        "vec_id",
-        "cell_id",
-        F.col("subspace").cast("int").alias("subspace"),
-        "sv",
-    )
+    return _pq_subs(resid, keys=("vec_id", "cell_id"), vector="rv")
 
 
 def _pq_resid_codes_op(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1722,16 +1694,8 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cents), F.col("q_cell") == F.col("cell_id"))
         .withColumn("q_rv", F.expr(vec.sub_q("q_qv", "c_qv", th.SPARK)))
     )
-    qslices = F.array(
-        *[F.slice("q_rv", i * PQ_SUBDIM + 1, PQ_SUBDIM) for i in range(PQ_M)]
-    )
-    qsubs = qres.select(
-        "query_id", "q_cell", F.posexplode(qslices).alias("q_subspace", "q_sv")
-    ).select(
-        "query_id",
-        "q_cell",
-        F.col("q_subspace").cast("int").alias("q_subspace"),
-        "q_sv",
+    qsubs = _pq_subs(
+        qres, keys=("query_id", "q_cell"), vector="q_rv", prefix="q_"
     )
     dtable = F.broadcast(
         qsubs.join(codebook, F.col("q_subspace") == F.col("subspace")).select(
@@ -1754,13 +1718,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("qd").cast("bigint").alias("adc_sqdist"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_sqdist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_sqdist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(adc, "adc_sqdist", descending=False)
 
 
 ann_ivfpq_residual_topk.__doc__ = (

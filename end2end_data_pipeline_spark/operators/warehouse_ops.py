@@ -40,6 +40,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from end2end_data_pipeline_spark.operators.event_analytics import (
+    SESSION_GAP_MINUTES,
+)
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
     drain_to_memory,
@@ -263,7 +266,7 @@ def state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_minute", "event_type")
 
 
-SESSION_REPLAY_GAP = "30 minutes"
+SESSION_REPLAY_GAP = f"{SESSION_GAP_MINUTES} minutes"
 
 
 @query(
@@ -274,7 +277,7 @@ SESSION_REPLAY_GAP = "30 minutes"
     # tests/test_r7_operators.py), so the oracle opens a new session
     # only at d > gap — the same convention as the batch lag-SQL
     # sessionization family.
-    oracle="""
+    oracle=f"""
     WITH slice AS (
       SELECT user_id, ts, event_id FROM events
       WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
@@ -282,7 +285,7 @@ SESSION_REPLAY_GAP = "30 minutes"
     ), gaps AS (
       SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                       OR ts - lag(ts) OVER w > INTERVAL {SESSION_GAP_MINUTES} MINUTE
                   THEN 1 ELSE 0 END AS new_session
       FROM slice
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -295,7 +298,7 @@ SESSION_REPLAY_GAP = "30 minutes"
     )
     SELECT user_id,
            strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S')
+           strftime(max(ts) + INTERVAL {SESSION_GAP_MINUTES} MINUTE, '%Y-%m-%d %H:%M:%S')
                AS session_end,
            count(*) AS n_events
     FROM sess GROUP BY user_id, sid

@@ -87,11 +87,4 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    # Ad-hoc conf overrides for A/B experiments (tools/profile_query.py
-    # runs): ';'-separated key=value pairs. Unset in normal operation,
-    # so the driver's bench sees only the committed defaults above.
-    for pair in os.environ.get("SPARK_GRAFT_SQL_CONF", "").split(";"):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()

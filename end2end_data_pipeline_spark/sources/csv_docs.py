@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from end2end_data_pipeline_spark.sources.jsonl import CORRUPT_COL
-from end2end_data_pipeline_spark.sources.tables import session_cached
+from end2end_data_pipeline_spark.sources.jsonl import CORRUPT_COL, _split_good_dead
 
 
 def _reader_options(reader):
@@ -50,25 +49,13 @@ def read_csv_docs(
     ``schema``'s columns, ``dead`` is (raw_line string) for
     quarantine. The caller's schema is REQUIRED (inference over a
     100 TB corpus is an extra full pass)."""
-    full = T.StructType(
-        [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
-    )
-    # same SPARK-21610 cache as the JSONL reader: the corrupt column
-    # cannot be queried alone straight off the scan; one cache per
-    # (path, schema), so repeated invocations reuse ONE
-    # InMemoryRelation
-    raw = session_cached(
+    return _split_good_dead(
         spark,
-        f"csv_raw:{path}:{full.json()}",
-        lambda: _reader_options(spark.read.schema(full)).csv(path),
+        "csv_raw",
+        path,
+        schema,
+        lambda full: _reader_options(spark.read.schema(full)).csv(path),
     )
-    good = raw.where(F.col(CORRUPT_COL).isNull()).select(
-        *[f.name for f in schema.fields]
-    )
-    dead = raw.where(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_line")
-    )
-    return good, dead
 
 
 def stream_csv_docs(

@@ -16,11 +16,13 @@ for replay, exactly like ``decode_events_avro_dlq`` and
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from end2end_data_pipeline_spark.sources.tables import session_cached
+from end2end_data_pipeline_spark.sources.tables import file_identity, session_cached
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -37,20 +39,47 @@ def read_jsonl_docs(
     REQUIRED: schema inference over a 100 TB corpus is an extra full
     pass, and a drifting producer should fail typed, not re-infer.
     """
-    full = T.StructType(
-        [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
-    )
-    # Spark requires materializing the corrupt column before
-    # filtering on it (SPARK-21610): referencing it straight off the
-    # scan is disallowed, so land the batch through a cache — one per
-    # (path, schema), not per call
-    raw = session_cached(
+    return _split_good_dead(
         spark,
-        f"jsonl_raw:{path}:{full.json()}",
-        lambda: spark.read.schema(full)
+        "jsonl_raw",
+        path,
+        schema,
+        lambda full: spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path),
+    )
+
+
+def _split_good_dead(
+    spark: SparkSession,
+    kind: str,
+    path: str,
+    schema: T.StructType,
+    read,
+) -> tuple[DataFrame, DataFrame]:
+    """(good, dead) frames of the PERMISSIVE read ``read(full)``, where
+    ``full`` is ``schema`` plus the corrupt column. Spark requires
+    materializing the corrupt column before filtering on it
+    (SPARK-21610): referencing it straight off the scan is disallowed,
+    so the batch lands through a cache, one per reader ``kind``,
+    absolute path, file identity and schema, not per call. A relative
+    and an absolute spelling share the entry, and a file that lands
+    under ``path`` later makes a new one."""
+    full = T.StructType(
+        [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
+    )
+    abspath = os.path.abspath(path)
+
+    def build() -> DataFrame:
+        # Spark's cache manager matches a new read of the same path to
+        # the earlier cached one, whose file listing is stale: refresh
+        # that entry first
+        spark.catalog.refreshByPath(abspath)
+        return read(full)
+
+    raw = session_cached(
+        spark, (kind, abspath, file_identity(path), full.json()), build
     )
     good = raw.where(F.col(CORRUPT_COL).isNull()).select(
         *[f.name for f in schema.fields]

@@ -93,7 +93,7 @@ def session_memo(spark: SparkSession, key, build, valid=None):
     return value
 
 
-def session_cached(spark: SparkSession, tag: str, build) -> DataFrame:
+def session_cached(spark: SparkSession, tag: str | tuple, build) -> DataFrame:
     """``build().cache()`` once per application and tag: repeated
     invocations (full-registry sweeps, bench repeats) reuse ONE
     InMemoryRelation instead of accumulating a fresh one per call,

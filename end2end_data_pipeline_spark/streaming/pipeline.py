@@ -19,10 +19,10 @@ and a no-overwrite rename onto an existing batch file fails, so one
 writer owns each batch (``session.get_spark`` picks the Hadoop
 ``FileSystem`` checkpoint manager for this).
 
-``trigger(availableNow=True)`` gives deterministic drain-the-source
-runs for tests and batch parity checks; a production deployment swaps
-the trigger for ``processingTime='1 minute'`` (T4) without touching
-the query.
+Both queries below run with ``trigger(availableNow=True)``: each start
+drains what has landed and stops, once per dropped file in the
+reference's cron rhythm (T4), and gives deterministic runs for tests
+and batch parity checks. The query itself is trigger-independent.
 """
 
 from __future__ import annotations
@@ -104,7 +104,6 @@ def start_minutely_aggregation(
     sink_path: str,
     checkpoint_path: str,
     watermark: str = DEFAULT_WATERMARK,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """End-to-end ingest->aggregate->sink stream with exactly-once
     sink semantics via checkpointing. Append output mode: a window is
@@ -112,17 +111,14 @@ def start_minutely_aggregation(
     equivalent of the reference's close-the-minute-then-extract."""
     events = read_event_stream(spark, source_path)
     agg = minutely_status_counts(events, watermark)
-    writer = (
+    return (
         agg.writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()
 
 
 def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -150,7 +146,6 @@ def publish_minutely_reports(
     checkpoint_path: str,
     publish,
     watermark: str = DEFAULT_WATERMARK,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The reference's report loop — aggregate the closed minute, build
     the JSON report, POST it (``airflow/dags/pipeline.py:205-245``) —
@@ -196,13 +191,10 @@ def publish_minutely_reports(
                 )
             )
 
-    writer = (
+    return (
         agg.writeStream.outputMode("append")
         .foreachBatch(_emit)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()
