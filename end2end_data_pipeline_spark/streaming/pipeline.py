@@ -121,10 +121,16 @@ def start_minutely_aggregation(
     )
 
 
-def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionized_counts(events: DataFrame, gap: str | None = None) -> DataFrame:
     """Session-window analytics over the stream (T6): per-user session
     event counts with a gap-based session definition — the analysis the
-    reference's data supports but its pipeline never runs."""
+    reference's data supports but its pipeline never runs. ``gap``
+    defaults to ``event_analytics.SESSION_GAP_MINUTES``, read at call
+    time, the gap every batch sessionized query uses."""
+    if gap is None:
+        from end2end_data_pipeline_spark.operators import event_analytics
+
+        gap = f"{event_analytics.SESSION_GAP_MINUTES} minutes"
     src = events
     if events.isStreaming:
         src = events.withWatermark("event_timestamp", DEFAULT_WATERMARK)

@@ -13,6 +13,7 @@ from tools.ab_pairs import (
     drain_summary,
     drained_early,
     parse_seeds,
+    per_query_report,
     quartiles,
     quiet_pairs,
     report,
@@ -141,3 +142,22 @@ def test_report_prints_the_verdict_over_quiet_pairs_beside_the_whole_set():
     for p in pairs:
         p["parent"]["steal_ticks"] = 5000
     assert report(pairs, SPEC)[1].endswith(f"{'not worse':10}  -")
+
+
+def test_per_query_lines_compare_the_runs_medians():
+    def run(medians):
+        r = _run(20.1, 20, 50)
+        r["notes"]["op_median_s"] = medians
+        return r
+
+    pairs = [
+        {"parent": run({"q1": 0.9 + i / 100, "q2": 0.5}), "change": run({"q1": 0.6, "q2": 0.5 + i / 100})}
+        for i in range(4)
+    ]
+    # a run that stopped before reaching q2 leaves that pair out of q2's line
+    del pairs[3]["change"]["notes"]["op_median_s"]["q2"]
+    head, q1, q2 = per_query_report(pairs)
+    assert head.split() == ["query", "parent", "med", "change", "med", "wins", "pairs"]
+    assert q1.split() == ["q1", "0.915", "0.6", "1.00", "4"]
+    # q2: ties and losses count for neither side
+    assert q2.split() == ["q2", "0.5", "0.51", "0.00", "3"]

@@ -39,6 +39,11 @@ that is: other tenants' CPU steal, not code, dominates the spread of a
 contended run. A run whose ``measured_s`` is below the
 benchmark's ``run_seconds`` drained its input before the time was up;
 it is flagged ``early``, and the summary counts such runs per side.
+
+Under the metric table, one line per query compares the two sides'
+medians of the runs' per-query median latencies (the notes line's
+``op_median_s``) and gives the change's win share, so a claim about
+single queries can be read from the A/B itself.
 """
 
 from __future__ import annotations
@@ -231,6 +236,25 @@ def report(pairs: list[dict], spec: dict) -> list[str]:
     return lines
 
 
+def per_query_report(pairs: list[dict]) -> list[str]:
+    """One line per query of the runs' notes-line ``op_median_s``: the
+    median over runs of each side's per-run median latency, and the
+    share of pairs the change won, over the pairs in which both runs
+    reached the query."""
+    medians = [(p["parent"]["notes"]["op_median_s"], p["change"]["notes"]["op_median_s"]) for p in pairs]
+    lines = [f"{'query':36} {'parent med':>11} {'change med':>11} {'wins':>6} {'pairs':>6}"]
+    for name in sorted({n for pm, cm in medians for n in (*pm, *cm)}):
+        both = [(pm[name], cm[name]) for pm, cm in medians if name in pm and name in cm]
+        if not both:
+            continue
+        parent, change = zip(*both)
+        lines.append(
+            f"{name:36} {statistics.median(parent):>11.4g} {statistics.median(change):>11.4g} "
+            f"{win_share(parent, change, 'lower'):>6.2f} {len(both):>6}"
+        )
+    return lines
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
@@ -262,6 +286,7 @@ def main() -> int:
           f"failed ops parent {failed['parent']}, change {failed['change']}")
     print("\n".join(drain_summary(pairs, spec["run_seconds"])))
     print("\n".join(report(pairs, spec)))
+    print("\n".join(per_query_report(pairs)))
     return 0
 
 

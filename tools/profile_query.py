@@ -3,7 +3,10 @@
 Times individual registered queries through the noop sink on the bench
 session (same warmups as bench.py), captures ``explain("formatted")``
 per query, and prints per-query wall stats plus plan-shape counters
-(Exchange count, join strategies, Python-eval nodes, task totals).
+(Exchange count, join strategies, Python-eval nodes, task totals) and,
+per timed repeat, the generated classes Spark compiled and the
+milliseconds it spent compiling them (``CodegenMetrics``), so a query
+that recompiles on every repeat shows it.
 
 Usage:
     PYTHONPATH=. python tools/profile_query.py [--repeat N] [--plans DIR] q1 q2 ...
@@ -37,6 +40,17 @@ def plan_counters(plan: str) -> dict:
         "sorts": len(re.findall(r"\bSort\b", plan)),
         "aggs": len(re.findall(r"HashAggregate", plan)),
     }
+
+
+def codegen_totals(jvm) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) so far in this JVM, from
+    ``CodegenMetrics``' compilation-time histogram. The milliseconds are
+    the sum of its samples while its reservoir still holds every one,
+    and mean x count after that."""
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count, snap = hist.getCount(), hist.getSnapshot()
+    values = list(snap.getValues())
+    return count, float(sum(values)) if len(values) == count else snap.getMean() * count
 
 
 def main() -> None:
@@ -83,12 +97,17 @@ def main() -> None:
             with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w") as f:
                 f.write(plan)
         walls = []
+        compiles, compile_ms = [], []
         tasks = 0
         for i in range(args.repeat):
             sc.setJobGroup(name, f"profile:{name}")
+            n0, ms0 = codegen_totals(sc._jvm)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t0)
+            n1, ms1 = codegen_totals(sc._jvm)
+            compiles.append(n1 - n0)
+            compile_ms.append(round(ms1 - ms0, 1))
             if i == 0:
                 tracker = sc.statusTracker()
                 for job_id in tracker.getJobIdsForGroup(name):
@@ -104,6 +123,8 @@ def main() -> None:
             "first": round(walls[0], 3),
             "min": round(min(walls), 3),
             "tasks": tasks,
+            "compiles": compiles,
+            "compile_ms": compile_ms,
             **c,
         }
         print(json.dumps({name: results[name]}), flush=True)
@@ -112,7 +133,9 @@ def main() -> None:
     for name, r in sorted(results.items(), key=lambda kv: -kv[1]["min"]):
         print(f"{r['min']:7.3f}s min {r['first']:7.3f}s first  tasks={r['tasks']:<5} "
               f"exch={r['exchanges']}(-{r['reused']}) smj={r['smj']} bhj={r['bhj']} "
-              f"shj={r['shj']} py={r['py']} sorts={r['sorts']} aggs={r['aggs']}  {name}")
+              f"shj={r['shj']} py={r['py']} sorts={r['sorts']} aggs={r['aggs']} "
+              f"compiles={'/'.join(map(str, r['compiles']))} "
+              f"compile_ms={'/'.join(f'{x:g}' for x in r['compile_ms'])}  {name}")
     spark.stop()
 
 
