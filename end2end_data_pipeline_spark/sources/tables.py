@@ -10,14 +10,18 @@ This module also holds the engine's one session-state registry. Every
 per-application thing an operator keeps — cached and checkpointed
 frames, drained memory-sink tables, written layouts and fixtures,
 fitted model state, a registered data source, the parquet schema of
-each table ``load_table`` reads — is an entry of ``session_memo``. A
-key names its owner: ``session_cached`` and ``session_checkpointed``
-key on ``("cached", tag)`` and ``("checkpointed", tag)``, a frame
-derived from a fixture dir takes its tag from ``frame_memo_tag``
-(name + abspath, so relative and absolute callers share one entry),
-model state keys on ``model_memo_key`` and a table schema on
-``("schema", abspath, file_identity)``; both include the table's
-``file_identity``, the (relpath, mtime, size) of each of its files.
+each table ``load_table`` reads and the global temp view it reads the
+table through — is an entry of ``session_memo``. A key names its
+owner: ``session_cached`` and ``session_checkpointed`` key on
+``("cached", tag)`` and ``("checkpointed", tag)``, a frame derived
+from a fixture dir takes its tag from ``frame_memo_tag`` (name +
+abspath, so relative and absolute callers share one entry), model
+state keys on ``model_memo_key``, a table schema on ``("schema",
+abspath, file_identity)`` and a table view on ``("table", abspath,
+file_identity)``; all three include the table's ``file_identity``,
+the (relpath, mtime, size) of each of its files. Table views are what
+make a warm read cheap: once a table's view exists, ``load_table``
+resolves no data source and lists no files for it.
 An entry is stored only after its build returns: a build that raises
 leaves nothing, and the next call builds again. Entries belong to one
 Spark application; the first call under a new ``applicationId`` drops
@@ -55,14 +59,16 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 
 class _AppState:
     """What the registry holds for one Spark application: its
-    entries, its scratch root (made on first use) and the sequence
-    that numbers its memory-sink tables."""
+    entries, its scratch root (made on first use), the sequence that
+    numbers its memory-sink tables and table views, and the
+    SparkContext last seen running it."""
 
     def __init__(self, app_id: str):
         self.app_id = app_id
         self.entries: dict = {}
         self.scratch: str | None = None
         self.ids = itertools.count()
+        self.sc = None
 
 
 _SESSION = _AppState("")
@@ -70,11 +76,16 @@ _SESSION = _AppState("")
 
 def _app_state(spark: SparkSession) -> _AppState:
     """The registry state of ``spark``'s application; a different
-    applicationId than the last one seen drops every entry."""
+    applicationId than the last one seen drops every entry. A
+    SparkContext runs one application, so its applicationId (two py4j
+    round trips) is asked only of a context other than the last one."""
     global _SESSION
-    app_id = spark.sparkContext.applicationId
-    if _SESSION.app_id != app_id:
-        _SESSION = _AppState(app_id)
+    sc = spark.sparkContext
+    if sc is not _SESSION.sc:
+        app_id = sc.applicationId
+        if _SESSION.app_id != app_id:
+            _SESSION = _AppState(app_id)
+        _SESSION.sc = sc
     return _SESSION
 
 
@@ -339,25 +350,24 @@ def _infer_schema(spark: SparkSession, path: str, name: str):
     return spark.read.parquet(path).schema
 
 
-def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The batch parquet read of one table, before normalization, with
-    its schema pinned: the schema is inferred once per application and
-    ``file_identity`` of the table, so the read only lists files."""
-    import os
-
+def _checked_path(sf_dir: str, name: str) -> str:
+    """``table_path(sf_dir, name)`` for a known table name."""
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = table_path(sf_dir, name)
-    files = file_identity(path)
-    if not files:
-        # nothing to pin: a missing path raises Spark's own error
-        return spark.read.parquet(path)
-    schema = session_memo(
+    return table_path(sf_dir, name)
+
+
+def _pinned_schema(spark: SparkSession, path: str, name: str, files: tuple):
+    """The registry's raw parquet schema of the table at ``path``, whose
+    local files are ``files`` (non-empty): inferred once per
+    application and ``file_identity``, with no frame built on a hit."""
+    import os
+
+    return session_memo(
         spark,
         ("schema", os.path.abspath(path), files),
         lambda: _infer_schema(spark, path, name),
     )
-    return spark.read.schema(schema).parquet(path)
 
 
 def _normalize(df: DataFrame, name: str) -> DataFrame:
@@ -368,6 +378,25 @@ def _normalize(df: DataFrame, name: str) -> DataFrame:
         # would corrupt epoch-nanos > 2^53)
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return _normalize_ntz(df)
+
+
+def _register_table_view(
+    spark: SparkSession, path: str, name: str, files: tuple
+) -> tuple[str, str]:
+    """Register the normalized, schema-pinned read of one table as a
+    global temp view. Returns the view's qualified name and the query
+    that reads it: a select that re-aliases every column, so each frame
+    read through the view gets its own attribute ids and two reads of
+    one table join and select like two separate reads."""
+    schema = _pinned_schema(spark, path, name, files)
+    view = f"spark_graft_{name}_{next(_app_state(spark).ids)}"
+    df = _normalize(spark.read.schema(schema).parquet(path), name)
+    df.createOrReplaceGlobalTempView(view)
+    qualified = f"{spark.conf.get('spark.sql.globalTempDatabase')}.{view}"
+    cols = ", ".join(
+        "`{0}` AS `{0}`".format(c.replace("`", "``")) for c in df.columns
+    )
+    return qualified, f"SELECT {cols} FROM {qualified}"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -382,25 +411,58 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncated to microseconds — the same truncation DuckDB applies when
     casting TIMESTAMP_NS down, so oracle comparisons stay aligned.
 
-    The read is built with the table's schema pinned (``_read_raw``),
-    so it starts no Spark job once the schema is known, and it leaves
-    no session conf changed for the reads that follow.
+    The table is read through the catalog. Its normalized read, with
+    the schema pinned (``_pinned_schema``), is registered once per
+    application and ``file_identity`` as a global temp view, an entry
+    of ``session_memo`` under ``("table", abspath, file_identity)``.
+    Every later call selects from that view, so once the view exists a
+    read resolves no data source, lists no files and starts no Spark
+    job. Each call re-aliases the view's columns, so two frames of one
+    table have distinct attribute ids, as two separate reads do. A
+    global view lives as long as the application and is visible from
+    ``spark.newSession()`` and from a ``foreachBatch`` function's
+    session. A table rewritten in place or given another part file has
+    a new key, so it is served from a new view; a dropped view is
+    registered again. A path with no local files is read unpinned, so
+    a missing table raises Spark's own error. No read leaves session
+    conf changed.
     """
-    return _normalize(_read_raw(spark, sf_dir, name), name)
+    import os
+
+    path = _checked_path(sf_dir, name)
+    files = file_identity(path)
+    if not files:
+        # nothing to pin: a missing path raises Spark's own error
+        return _normalize(spark.read.parquet(path), name)
+    _, query = session_memo(
+        spark,
+        ("table", os.path.abspath(path), files),
+        lambda: _register_table_view(spark, path, name, files),
+        valid=lambda entry: spark.catalog.tableExists(entry[0]),
+    )
+    # an empty dict of arguments goes to the JVM as one map; leaving
+    # ``args`` out builds an empty list in four py4j round trips
+    return spark.sql(query, args={})
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A file-stream source over one table with ``load_table``'s
-    schema and column types: the stream is pinned to the raw schema
-    the batch read sees, then normalized by the same rule. Both
+    schema and column types: the stream is pinned to the registry's
+    raw schema of the table, then normalized by the same rule. Both
     fixture layouts stream through one path: a one-alternative glob
     group, ``{sf_dir}/{<name>.parquet}``, matches the table whether it
     is a single file (which the file source rejects as a plain base
     path) or a directory (whose part files the glob match lists)."""
     import os
 
-    schema = _read_raw(spark, sf_dir, name).schema
-    head, tail = os.path.split(table_path(sf_dir, name))
+    path = _checked_path(sf_dir, name)
+    files = file_identity(path)
+    # a path with no local files: Spark's own inference, and its error
+    schema = (
+        _pinned_schema(spark, path, name, files) if files
+        else spark.read.parquet(path).schema
+    )
+    head, tail = os.path.split(path)
     stream = spark.readStream.schema(schema).parquet(f"{head}/{{{tail}}}")
     return _normalize(stream, name)
 

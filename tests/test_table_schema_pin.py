@@ -3,7 +3,8 @@ per application and file identity and reads with it pinned: building a
 query over tables already read starts no Spark job, a table rewritten
 in place or given another part file is read with its new schema, and
 a nanosecond ``events.ts`` is decoded through the pinned schema
-without leaving ``nanosAsLong`` changed on the session."""
+without leaving ``nanosAsLong`` changed on the session. A rewritten
+table is served from a new table view."""
 
 from __future__ import annotations
 
@@ -25,7 +26,9 @@ from end2end_data_pipeline_spark.sources.tables import (
     stream_table,
     table_path,
 )
+from tests.test_table_views import table_view
 from tools.driver_rehearsal import SF_DRIVER
+
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -66,12 +69,15 @@ def test_single_file_table_rewritten_in_place_shows_its_new_column(spark, sf_dir
     shutil.copy(table_path(sf_dir, "region"), path)
     assert load_table(spark, sf, "region").columns == ["r_regionkey", "r_name"]
     key = model_memo_key(sf, "region")
+    view = table_view(spark, sf, "region")
 
     t = pq.read_table(path)
     pq.write_table(t.append_column("r_extra", pa.array(range(t.num_rows), pa.int64())), path)
     assert model_memo_key(sf, "region") != key
     df = load_table(spark, sf, "region")
     assert df.columns == ["r_regionkey", "r_name", "r_extra"]
+    # served from a view of its own, not the one of the old file
+    assert table_view(spark, sf, "region") != view
     assert sorted(r.r_extra for r in df.collect()) == list(range(t.num_rows))
 
 

@@ -8,6 +8,14 @@ per timed repeat, the generated classes Spark compiled and the
 milliseconds it spent compiling them (``CodegenMetrics``), so a query
 that recompiles on every repeat shows it.
 
+Each timed repeat also splits the query's cost into its build and its
+execution: the py4j round trips its build made (``send_command``
+calls), build milliseconds, and, from the status store's job
+submission and completion times, the milliseconds from the end of the
+build to the first job (planning the execution), inside jobs, and
+between jobs. A round-trip count repeats exactly from run to run, so
+a change to build cost can be stated as one.
+
 Usage:
     PYTHONPATH=. python tools/profile_query.py [--repeat N] [--plans DIR] q1 q2 ...
     PYTHONPATH=. python tools/profile_query.py --top 20          # slowest by BENCH_FULL.json
@@ -53,6 +61,49 @@ def codegen_totals(jvm) -> tuple[int, float]:
     return count, float(sum(values)) if len(values) == count else snap.getMean() * count
 
 
+# per timed repeat: the build's py4j round trips, then milliseconds
+PHASES = ("round_trips", "build_ms", "plan_ms", "job_ms", "gap_ms")
+
+
+class RoundTrips:
+    """Counts the py4j commands the driver sends to the JVM."""
+
+    def __init__(self, sc):
+        client = type(sc._gateway._gateway_client)
+        send = client.send_command
+        self.count = 0
+
+        def counting(gateway_client, *args, **kwargs):
+            self.count += 1
+            return send(gateway_client, *args, **kwargs)
+
+        client.send_command = counting
+
+
+def job_phases(sc, group: str, built_ms: float) -> tuple[float, float, float]:
+    """(planning, in-job, between-job) milliseconds of the jobs of
+    ``group``: from ``built_ms`` (epoch ms, the end of the build) to the
+    first job's submission, inside the union of the jobs' submission to
+    completion spans, and in the gaps of that union."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    store = jsc.statusStore()
+    spans = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        job = store.job(job_id)
+        spans.append(
+            (job.submissionTime().get().getTime(), job.completionTime().get().getTime())
+        )
+    if not spans:
+        return 0.0, 0.0, 0.0
+    spans.sort()
+    inside, end = 0.0, spans[0][0]
+    for start, stop in spans:
+        inside += max(0, stop - max(start, end))
+        end = max(end, stop)
+    return spans[0][0] - built_ms, inside, end - spans[0][0] - inside
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -79,6 +130,7 @@ def main() -> None:
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
+    trips = RoundTrips(sc)
     results = {}
     for name in names:
         fn = queries[name]
@@ -98,19 +150,29 @@ def main() -> None:
                 f.write(plan)
         walls = []
         compiles, compile_ms = [], []
+        phases = {k: [] for k in PHASES}
         tasks = 0
         for i in range(args.repeat):
-            sc.setJobGroup(name, f"profile:{name}")
+            group = f"{name}:{i}"
+            sc.setJobGroup(group, f"profile:{name}")
             n0, ms0 = codegen_totals(sc._jvm)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            trips0 = trips.count
+            t0, epoch0 = time.perf_counter(), time.time()
+            built = fn(spark, sf_dir)
+            build_s = time.perf_counter() - t0
+            build_trips = trips.count - trips0
+            built.write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t0)
             n1, ms1 = codegen_totals(sc._jvm)
             compiles.append(n1 - n0)
             compile_ms.append(round(ms1 - ms0, 1))
+            plan_ms, job_ms, gap_ms = job_phases(sc, group, (epoch0 + build_s) * 1000)
+            phases["round_trips"].append(build_trips)
+            for k, ms in zip(PHASES[1:], (build_s * 1000, plan_ms, job_ms, gap_ms)):
+                phases[k].append(round(ms, 1))
             if i == 0:
                 tracker = sc.statusTracker()
-                for job_id in tracker.getJobIdsForGroup(name):
+                for job_id in tracker.getJobIdsForGroup(group):
                     info = tracker.getJobInfo(job_id)
                     if info is None:
                         continue
@@ -125,6 +187,7 @@ def main() -> None:
             "tasks": tasks,
             "compiles": compiles,
             "compile_ms": compile_ms,
+            **phases,
             **c,
         }
         print(json.dumps({name: results[name]}), flush=True)
@@ -136,6 +199,9 @@ def main() -> None:
               f"shj={r['shj']} py={r['py']} sorts={r['sorts']} aggs={r['aggs']} "
               f"compiles={'/'.join(map(str, r['compiles']))} "
               f"compile_ms={'/'.join(f'{x:g}' for x in r['compile_ms'])}  {name}")
+        print("        " + "  ".join(
+            f"{k}={'/'.join(f'{x:g}' for x in r[k])}"
+            for k in PHASES))
     spark.stop()
 
 
