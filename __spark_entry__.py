@@ -21,17 +21,9 @@ from end2end_data_pipeline_spark.registry import ORACLE, QUERIES, QueryFn
 SF0001_DIR = "/root/testdata/sf0.001"
 
 # The driver's correctness gate checks the FIRST 50 registered queries
-# (registration order); the rest are covered by the identical local
-# gate (tests/test_oracle_parity.py runs all of them). The window
-# ROTATES per round so the union of driver-green rows converges on —
-# and stays on — the whole registry; the union claim is MECHANICAL
-# (``tools/union_check.py`` recomputes it from the committed
-# CORRECTNESS_r*.json files every test run; closed at r8: 199/199).
-# This list is GENERATED by ``tools/rotate_window.py --write`` (which
-# also regenerates CATALOG.md in the same run): every query still
-# awaiting a driver-green row first, then the LEAST-recently-regreened
-# anchors (max-min staleness over each query's LAST green round).
-# Do not hand-edit — re-run the tool after registering new queries.
+# (registration order); tests/test_oracle_parity.py checks every query
+# against its oracle, and these 50 again at sf0.01. The list is
+# frozen: registering a query does not change it.
 CHECKED_FIRST = [
     "embedding_centroid_margin_profile",
     "embedding_pq_codebook",
@@ -84,18 +76,6 @@ CHECKED_FIRST = [
     "dedup_minhash_pairs",
     "dedup_minhash_signatures",
 ]
-
-# Queries awaiting their FIRST driver check that exceed this round's
-# 50 window slots (the registry outgrew one round's check budget).
-# GENERATED by ``tools/rotate_window.py --write`` alongside
-# CHECKED_FIRST. This is a FIFO queue: the next rotation consumes it
-# in THIS order, ahead of both newly-registered queries and the
-# staleness anchors — seniority, not registry order, decides slots,
-# so a queued query can wait at most ceil(queue/50) rotations and is
-# never starved by later registration waves (r10 fix). The
-# no-forgotten-queries gate (tests/test_union_check.py) counts these
-# rows as explicitly scheduled.
-WINDOW_OVERFLOW: list[str] = []
 
 
 def _ordered_queries() -> dict[str, QueryFn]:

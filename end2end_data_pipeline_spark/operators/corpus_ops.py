@@ -21,14 +21,13 @@ from pyspark.sql import functions as F
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
-    drain_to_memory,
+    drained_table,
     fan_out,
     frame_memo_tag,
     input_scaled_partitions,
     load_table,
     model_memo_key,
     session_cached,
-    session_memo,
     stream_table,
 )
 
@@ -1153,7 +1152,7 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _quality_exprs,
     )
 
-    def build() -> str:
+    def build() -> DataFrame:
         # corpus index frames — the STATIC side of the stream-static
         # joins (deterministic batch frames; session-cached builders).
         # Survivorship among QUALITY SURVIVORS, same convention as the
@@ -1169,7 +1168,7 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dsel = _dsir_perdoc(spark, sf_dir).select("doc_id", "selected")
 
-        flagged_stream = (
+        return (
             stream_table(spark, sf_dir, "documents")
             .select(
                 "doc_id",
@@ -1200,20 +1199,18 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sel"),
             )
         )
-        return drain_to_memory(
-            spark, "curation_stream_replay", flagged_stream, "append"
-        )
 
     # keyed on (abspath, mtime, size) via the shared builder so
     # regenerating documents.parquet at the same path within one
     # application can never serve a stale drained table (r10 advice)
-    table = session_memo(
+    flagged = drained_table(
         spark,
         ("curation_stream_replay", *model_memo_key(sf_dir, "documents")),
+        "curation_stream_replay",
         build,
-        valid=spark.catalog.tableExists,
+        "append",
     )
-    return _funnel_rollup(spark.table(table))
+    return _funnel_rollup(flagged)
 
 
 _ABL_TOKS_DUCK = th.tokens("text", th.DUCK)

@@ -42,7 +42,7 @@ from end2end_data_pipeline_spark.operators.multimodal import (
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.jsonl import read_jsonl_docs
 from end2end_data_pipeline_spark.sources.tables import (
-    drain_to_memory,
+    drained_table,
     frame_memo_tag,
     load_table,
     session_memo,
@@ -425,18 +425,14 @@ def webdataset_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle the batch one has (pattern:
     ``warehouse_ops.minute_counts_stream_replay``)."""
     fix = _webdataset_fixture(spark, sf_dir)
-    table = session_memo(
+    members = drained_table(
         spark,
         frame_memo_tag(sf_dir, "webdataset_stream_replay"),
-        lambda: drain_to_memory(
-            spark,
-            "wds_stream_replay",
-            stream_tar_shards_unified(spark, fix, glob="*.tar"),
-            "append",
-        ),
-        valid=spark.catalog.tableExists,
+        "wds_stream_replay",
+        lambda: stream_tar_shards_unified(spark, fix, glob="*.tar"),
+        "append",
     )
-    return _audit_members_by_shard(spark, spark.table(table), sf_dir)
+    return _audit_members_by_shard(spark, members, sf_dir)
 
 
 # --- shared pieces for the columnar-format roundtrips (OCF + ORC) ----
@@ -794,20 +790,15 @@ def jsonl_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fix = _jsonl_fixture(spark, sf_dir)
-    table = session_memo(
+    parsed = drained_table(
         spark,
         frame_memo_tag(sf_dir, "jsonl_stream_replay"),
+        "jsonl_stream_replay",
         # file-stream sources take a DIRECTORY (files land, the source
         # discovers them); the fixture dir holds only corpus.jsonl
-        lambda: drain_to_memory(
-            spark,
-            "jsonl_stream_replay",
-            stream_jsonl_docs(spark, fix, JSONL_SCHEMA),
-            "append",
-        ),
-        valid=spark.catalog.tableExists,
+        lambda: stream_jsonl_docs(spark, fix, JSONL_SCHEMA),
+        "append",
     )
-    parsed = spark.table(table)
     good = parsed.where(~F.col("is_corrupt")).select("lang", "text", "n_chars")
     dead = parsed.where(F.col("is_corrupt")).select(
         F.col(CORRUPT_COL).alias("raw_line")
@@ -936,18 +927,13 @@ def csv_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end2end_data_pipeline_spark.sources.jsonl import CORRUPT_COL
 
     fix = _csv_fixture(spark, sf_dir)
-    table = session_memo(
+    parsed = drained_table(
         spark,
         frame_memo_tag(sf_dir, "csv_stream_replay"),
-        lambda: drain_to_memory(
-            spark,
-            "csv_stream_replay",
-            stream_csv_docs(spark, fix, CSV_SCHEMA),
-            "append",
-        ),
-        valid=spark.catalog.tableExists,
+        "csv_stream_replay",
+        lambda: stream_csv_docs(spark, fix, CSV_SCHEMA),
+        "append",
     )
-    parsed = spark.table(table)
     good = parsed.where(~F.col("is_corrupt")).select("lang", "text", "n_chars")
     dead = parsed.where(F.col("is_corrupt")).select(
         F.col(CORRUPT_COL).alias("raw_line")

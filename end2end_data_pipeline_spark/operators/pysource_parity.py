@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
-    drain_to_memory,
+    drained_table,
     session_memo,
 )
 
@@ -225,7 +225,7 @@ def python_datasource_stream_parity(
     commit streaming scan)."""
     _register_source(spark)
 
-    def build() -> str:
+    def build() -> DataFrame:
         feed = (
             spark.readStream.format("synthevents")
             .option("n_rows", SYNTH_N_ROWS)
@@ -234,20 +234,19 @@ def python_datasource_stream_parity(
         # streaming forbids distinct aggregates: keep per-(type, user)
         # state in the stream (the standard two-level rewrite) and let
         # the final batch read over the sink do the distinct rollup
-        agg = feed.groupBy("event_type", "user_id").agg(
+        return feed.groupBy("event_type", "user_id").agg(
             F.count("*").alias("n"),
             F.sum("value_cents").cast("bigint").alias("cents"),
         )
-        return drain_to_memory(spark, "pysource_stream", agg, "complete")
 
-    table = session_memo(
-        spark,
-        "python_datasource_stream_parity",
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            "python_datasource_stream_parity",
+            "pysource_stream",
+            build,
+            "complete",
+        )
         .groupBy("event_type")
         .agg(
             F.sum("n").cast("bigint").alias("n"),

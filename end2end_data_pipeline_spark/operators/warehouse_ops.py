@@ -46,6 +46,7 @@ from end2end_data_pipeline_spark.operators.event_analytics import (
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
     drain_to_memory,
+    drained_table,
     frame_memo_tag,
     load_table,
     session_memo,
@@ -195,19 +196,14 @@ def minute_counts_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic replay form. State here is bounded by the day
     slice; the unbounded-production form adds ``withWatermark`` and
     append mode (``streaming/pipeline.py:68``, golden-tested)."""
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "minute_counts_stream_replay"),
-        lambda: drain_to_memory(
-            spark,
-            "minute_counts_stream_replay",
-            _minute_counts_stream(spark, sf_dir),
-            "complete",
-        ),
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "minute_counts_stream_replay"),
+            "minute_counts_stream_replay",
+            lambda: _minute_counts_stream(spark, sf_dir),
+            "complete",
+        )
         .select(
             F.date_format(F.col("w.start"), MINUTE_FMT).alias("event_minute"),
             "event_type",
@@ -321,9 +317,9 @@ def session_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (``streaming/pipeline.py:sessionized_counts``); the bounded
     day-slice replay holds state for the slice only."""
 
-    def build() -> str:
+    def build() -> DataFrame:
         stream = stream_table(spark, sf_dir, "events")
-        agg = (
+        return (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
                 & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
@@ -334,18 +330,15 @@ def session_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count("*").alias("n_events"))
         )
-        return drain_to_memory(
-            spark, "session_window_stream_replay", agg, "complete"
-        )
 
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "session_window_stream_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "session_window_stream_replay"),
+            "session_window_stream_replay",
+            build,
+            "complete",
+        )
         .select(
             "user_id",
             F.date_format(F.col("s.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -384,7 +377,7 @@ def event_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction that brings is a liveness tradeoff the bounded replay does
     not need."""
 
-    def build() -> str:
+    def build() -> DataFrame:
         kept = (
             stream_table(spark, sf_dir, "events")
             .withColumn(
@@ -392,21 +385,16 @@ def event_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .dropDuplicates(["user_id", "event_type", "bucket"])
         )
-        return drain_to_memory(
+        return kept.select("event_type", "user_id", "bucket")
+
+    survivors = (
+        drained_table(
             spark,
+            frame_memo_tag(sf_dir, "event_dedup_stream_replay"),
             "event_dedup_stream_replay",
-            kept.select("event_type", "user_id", "bucket"),
+            build,
             "append",
         )
-
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "event_dedup_stream_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
-    survivors = (
-        spark.table(table)
         .groupBy("event_type")
         .agg(F.count("*").cast("bigint").alias("n_kept"))
     )
@@ -474,9 +462,9 @@ def sliding_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-production form adds ``withWatermark`` + append mode so
     closed windows evict (``streaming/pipeline.py``, golden-tested)."""
 
-    def build() -> str:
+    def build() -> DataFrame:
         stream = stream_table(spark, sf_dir, "events")
-        agg = (
+        return (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
                 & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
@@ -487,18 +475,15 @@ def sliding_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count("*").alias("n_events"))
         )
-        return drain_to_memory(
-            spark, "sliding_window_stream_replay", agg, "complete"
-        )
 
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "sliding_window_stream_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "sliding_window_stream_replay"),
+            "sliding_window_stream_replay",
+            build,
+            "complete",
+        )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm").alias(
                 "window_start"
@@ -541,13 +526,13 @@ def enrich_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. A dim too big to broadcast would bucket both sides
     instead (``operators/bucketed.py`` pattern)."""
 
-    def build() -> str:
+    def build() -> DataFrame:
         dim = load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("mktsegment"),
         )
         stream = stream_table(spark, sf_dir, "events")
-        agg = (
+        return (
             stream.where(
                 (F.col("ts") >= F.lit(SLICE_START).cast("timestamp"))
                 & (F.col("ts") < F.lit(SLICE_END).cast("timestamp"))
@@ -561,18 +546,15 @@ def enrich_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("value_cents"),
             )
         )
-        return drain_to_memory(
-            spark, "enrich_stream_static_replay", agg, "complete"
-        )
 
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "enrich_stream_static_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "enrich_stream_static_replay"),
+            "enrich_stream_static_replay",
+            build,
+            "complete",
+        )
         .select("mktsegment", "event_type", "n_events", "value_cents")
         .orderBy("mktsegment", "event_type")
     )
@@ -824,26 +806,23 @@ def view_purchase_stream_join_replay(
     )
 
 
-    def build() -> str:
+    def build() -> DataFrame:
         stream = stream_table(spark, sf_dir, "events")
-        matched = purchases_after_views(
+        return purchases_after_views(
             stream.where(F.col("event_type") == "view"),
             stream.where(F.col("event_type") == "purchase"),
             within="15 minutes",
             watermark="60 days",  # fixture spans 30 days: never evict
             ts_col="ts",
         )
-        return drain_to_memory(
-            spark, "view_purchase_join_replay", matched, "append"
-        )
 
-    table = session_memo(
+    return drained_table(
         spark,
         frame_memo_tag(sf_dir, "view_purchase_stream_join_replay"),
+        "view_purchase_join_replay",
         build,
-        valid=spark.catalog.tableExists,
-    )
-    return spark.table(table).agg(
+        "append",
+    ).agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum("gap_ms"), F.lit(0)).cast("bigint").alias(
             "total_gap_ms"
@@ -1061,27 +1040,26 @@ def error_streak_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-    def build() -> str:
+    def build() -> DataFrame:
         stream = stream_table(spark, sf_dir, "events").withColumn(
             "user_id", F.col("user_id").cast("string")
         )
-        alerts = error_streak_alerts(
+        return error_streak_alerts(
             stream,
             ts_col="ts",
             error_predicate="event_type = 'error'",
             watermark="60 days",  # bounded replay: never close groups early
             tiebreak_col="event_id",
         )
-        return drain_to_memory(spark, "error_streak_replay", alerts, "append")
 
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "error_streak_stream_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "error_streak_stream_replay"),
+            "error_streak_replay",
+            build,
+            "append",
+        )
         .select(
             F.col("user_id").cast("bigint").alias("user_id"),
             F.unix_millis("alert_ts").alias("alert_ms"),
@@ -1114,23 +1092,20 @@ def first_seen_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-    def build() -> str:
+    def build() -> DataFrame:
         stream = stream_table(spark, sf_dir, "events").withColumn(
             "user_id", F.col("user_id").cast("string")
         )
-        announced = first_seen_users(stream, ts_col="ts", watermark="60 days")
-        return drain_to_memory(
-            spark, "first_seen_replay", announced, "append"
-        )
+        return first_seen_users(stream, ts_col="ts", watermark="60 days")
 
-    table = session_memo(
-        spark,
-        frame_memo_tag(sf_dir, "first_seen_stream_replay"),
-        build,
-        valid=spark.catalog.tableExists,
-    )
     return (
-        spark.table(table)
+        drained_table(
+            spark,
+            frame_memo_tag(sf_dir, "first_seen_stream_replay"),
+            "first_seen_replay",
+            build,
+            "append",
+        )
         .select(
             F.col("user_id").cast("bigint").alias("user_id"),
             F.date_format("first_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(

@@ -250,6 +250,22 @@ def drain_to_memory(
     return table
 
 
+def drained_table(
+    spark: SparkSession, key, name: str, build_stream, output_mode: str
+) -> DataFrame:
+    """The memory-sink table that ``drain_to_memory`` fills from the
+    zero-argument ``build_stream()``, drained once per application and
+    ``key``. A drained table stays valid while the catalog has it; a
+    hit whose table was dropped drains again."""
+    table = session_memo(
+        spark,
+        key,
+        lambda: drain_to_memory(spark, name, build_stream(), output_mode),
+        valid=spark.catalog.tableExists,
+    )
+    return spark.table(table)
+
+
 def model_memo_key(sf_dir: str, table: str) -> tuple:
     """Key part for MODEL STATE trained off one fixture table (k-means
     centroids, BPE merge lists, drained replay state): (abspath(sf_dir),

@@ -1,6 +1,6 @@
 """CATALOG.md can never drift from the registry: regenerating must
-reproduce the committed file byte-for-byte (the same mechanization as
-the union tracker — docs that lie fail the suite)."""
+reproduce the committed file byte-for-byte (docs that lie fail the
+suite)."""
 
 from __future__ import annotations
 

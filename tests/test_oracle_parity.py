@@ -48,8 +48,8 @@ def test_checked_window_contract():
     invariants instead: the window is 50 unique, registered,
     oracle-paired names; ``queries()`` loses no registered query while
     reordering; and the core operator families are represented. The
-    family map must be re-aligned whenever CHECKED_FIRST rotates (it
-    asserts the CURRENT window, not a historical one)."""
+    window is frozen, so the family map names its members once and
+    fails if a listed query or family leaves it."""
     window = entrymod.CHECKED_FIRST
     assert len(window) == len(set(window)) == 50
     missing = [n for n in window if n not in QUERIES]
@@ -63,12 +63,8 @@ def test_checked_window_contract():
     assert set(QUERIES) == set(RAW)
     assert callable(entrymod.queries) and callable(entrymod.oracle_sql)
     families = {
-        # round-14 window composition: pure staleness refresh again —
-        # the 50 rows whose last green check is oldest, which pulls in
-        # the r13/r14-rewritten surfaces awaiting driver confirmation
-        # (centroid margin, PQ codebook/shared encode, the dedup
-        # cluster family) — map re-aligned to THIS window per the
-        # rotation rule.
+        # the operator families the frozen window covers, one
+        # representative query each
         "embedding_centroid_margin_profile": "r13 margin-profile rewrite",
         "embedding_pq_codebook": "PQ codebook (r14 shared encode)",
         "ann_ivf_cells": "IVF census (assignment argmax)",
@@ -97,7 +93,7 @@ def test_checked_window_contract():
         "q12_shipmode_priority_bucketed": "bucketed twin (Q12)",
         "q18_large_orders_bucketed": "bucketed twin (Q18)",
         "q4_order_priority_bucketed": "bucketed twin (Q4)",
-        # cross-cutting families still represented in this window
+        # cross-cutting families represented by name prefix
         "event_": "event analytics prefix",
         "events_": "event drift/changepoint prefix",
         "orders_": "orders analytics prefix",

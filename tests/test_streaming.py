@@ -477,8 +477,9 @@ def test_watermark_drops_late_data(spark, tmp_path):
 def test_stream_replay_query_uses_streaming_engine(spark):
     """``minute_counts_stream_replay`` must be the REAL streaming path,
     not a batch shortcut: its first call registers a memory-sink table
-    produced by a completed StreamingQuery (checkpoint on disk), and
-    repeat calls reuse that sink instead of re-running the stream."""
+    produced by a completed StreamingQuery (checkpoint on disk),
+    repeat calls reuse that sink instead of re-running the stream, and
+    a call after the sink table was dropped drains a new one."""
     import os
 
     from end2end_data_pipeline_spark.operators import warehouse_ops
@@ -496,7 +497,14 @@ def test_stream_replay_query_uses_streaming_engine(spark):
     # memoized: second call returns the same sink without a new table
     df2 = warehouse_ops.minute_counts_stream_replay(spark, sf)
     assert tables._app_state(spark).entries[key] == table
-    assert df1.collect() == df2.collect()
+    rows = df1.collect()
+    assert df2.collect() == rows
+    # a dropped sink table is drained again into a new one
+    spark.catalog.dropTempView(table)
+    df3 = warehouse_ops.minute_counts_stream_replay(spark, sf)
+    redrained = tables._app_state(spark).entries[key]
+    assert redrained != table and spark.catalog.tableExists(redrained)
+    assert df3.collect() == rows
 
 
 def test_avro_framed_stream_matches_batch(spark, tmp_path, events_with_tail):

@@ -13,8 +13,8 @@ Usage:
     python tools/driver_rehearsal.py --all        # whole registry
     python tools/driver_rehearsal.py q1 q2 ...    # named queries
 
-Exit 0 only when everything matches — run this before every round
-hand-off; it is the closest local signal to CORRECTNESS_r{N}.json.
+Exit 0 only when everything matches — run this before handing off a
+change; it repeats the contract's correctness check locally.
 """
 
 from __future__ import annotations

@@ -1,11 +1,9 @@
 """Generate CATALOG.md — the user-facing index of every registered
 query: where it lives, what it does (first docstring sentence), and
-its verification status (oracle-paired; driver-green round from the
-committed CORRECTNESS files, or the current-window slot).
+a ``(rows-only)`` marker on any query without a DuckDB oracle.
 
 Deterministic output; ``tests/test_catalog.py`` regenerates and diffs
-so the committed file can never drift from the registry (same
-mechanization as ``tools/union_check.py`` for the green union).
+so the committed file can never drift from the registry.
 
 Run: PYTHONPATH=. python tools/gen_catalog.py [--write]
 """
@@ -31,13 +29,8 @@ def first_sentence(doc: str | None) -> str:
 
 
 def render() -> str:
-    import __spark_entry__ as entrymod
+    import end2end_data_pipeline_spark.operators  # noqa: F401  (registers queries)
     from end2end_data_pipeline_spark.registry import ORACLE, QUERIES
-    from tools.union_check import green_union
-
-    union = green_union(REPO)
-    window = set(entrymod.CHECKED_FIRST)
-    overflow = set(getattr(entrymod, "WINDOW_OVERFLOW", []))
 
     by_module: dict[str, list[tuple[str, str]]] = {}
     for name, fn in QUERIES.items():
@@ -51,40 +44,21 @@ def render() -> str:
         "(`tests/test_catalog.py` diffs this file against the registry).",
         "",
         f"{len(QUERIES)} queries, {len(ORACLE)} oracle-paired"
-        f" ({100 * len(ORACLE) // len(QUERIES)}%).",
-        "Status: `rN` = last driver-green round in CORRECTNESS_r*.json;",
-        "`windowed` = holds a slot in the current 50-query check window",
-        "(checked this round; prior greens remain in the union);",
-        "`queued` = registered past this round's window budget, leads",
-        "the next rotation (`__spark_entry__.WINDOW_OVERFLOW`).",
+        f" ({100 * len(ORACLE) // len(QUERIES)}%);"
+        " `(rows-only)` marks a query without an oracle.",
         "",
     ]
     for mod in sorted(by_module):
         lines.append(f"## operators/{mod}.py")
         lines.append("")
-        lines.append("| query | status | summary |")
-        lines.append("|---|---|---|")
+        lines.append("| query | summary |")
+        lines.append("|---|---|")
         for name, summary in sorted(by_module[mod]):
-            # Window slots render as `windowed` UNCONDITIONALLY so the
-            # driver landing a fresh CORRECTNESS file mid-round can
-            # never make the committed catalog stale (the r7/r8
-            # recurring red test): render output depends only on the
-            # registry, the window, and NON-window rows' last-green
-            # tags — and non-window rows can't gain rows this round.
-            if name in window:
-                status = "windowed"
-            elif name in overflow:
-                status = "queued"
-            elif name in union:
-                r = str(union[name])
-                status = r if r.startswith("r") else f"r{r}"
-            else:  # pragma: no cover — union_check gate forbids this
-                status = "UNTRACKED"
             oracle = "" if name in ORACLE else " (rows-only)"
             summary = summary.replace("|", "\\|")
-            lines.append(f"| `{name}` | {status}{oracle} | {summary} |")
+            lines.append(f"| `{name}`{oracle} | {summary} |")
         lines.append("")
-    return "\n".join(lines) + ""
+    return "\n".join(lines)
 
 
 def main() -> int:

@@ -10,10 +10,11 @@ that recompiles on every repeat shows it.
 
 Each timed repeat also splits the query's cost into its build and its
 execution: the py4j round trips its build made (``send_command``
-calls), build milliseconds, and, from the status store's job
-submission and completion times, the milliseconds from the end of the
-build to the first job (planning the execution), inside jobs, and
-between jobs. A round-trip count repeats exactly from run to run, so
+calls, less the memory deletes py4j's finalizer sends when Python's
+garbage collector runs), build milliseconds, and, from the status
+store's job submission and completion times, the milliseconds from the
+end of the build to the first job (planning the execution), inside
+jobs, and between jobs. A round-trip count repeats exactly from run to run, so
 a change to build cost can be stated as one.
 
 Usage:
@@ -29,6 +30,8 @@ import os
 import re
 import sys
 import time
+
+from py4j import protocol as proto
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -65,17 +68,26 @@ def codegen_totals(jvm) -> tuple[int, float]:
 PHASES = ("round_trips", "build_ms", "plan_ms", "job_ms", "gap_ms")
 
 
+# The prefix of the command py4j's finalizer sends to free a JVM object
+# once Python's garbage collector drops its last reference. Collection
+# runs whenever the allocator decides, so these commands are not the
+# build's and would make the count vary from run to run.
+GC_DELETE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+
 class RoundTrips:
-    """Counts the py4j commands the driver sends to the JVM."""
+    """Counts the py4j commands the driver sends to the JVM, apart from
+    the finalizer's memory deletes (``GC_DELETE``)."""
 
     def __init__(self, sc):
         client = type(sc._gateway._gateway_client)
         send = client.send_command
         self.count = 0
 
-        def counting(gateway_client, *args, **kwargs):
-            self.count += 1
-            return send(gateway_client, *args, **kwargs)
+        def counting(gateway_client, command, *args, **kwargs):
+            if not command.startswith(GC_DELETE):
+                self.count += 1
+            return send(gateway_client, command, *args, **kwargs)
 
         client.send_command = counting
 
